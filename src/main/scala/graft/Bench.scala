@@ -21,25 +21,17 @@ object Bench extends QueryShared {
     * contract (no DuckDB twin can replay xxhash64), hence registered here
     * and not in `SparkEntry.queries`. */
   private[graft] val fastLanes: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "fast__q_dedup_minhash" -> ((s, d) => {
+    "fast__q_dedup_minhash" -> sorted("id_a", "id_b") { (s, d) =>
       operators.Dedup.minhashNearDups(Tables.loadWide(s, d, "documents"),
           "text", "doc_id", numHashes = 16, rowsPerBand = 4,
           shingleSize = 3, threshold = 0.5, useMd5 = false)
-        // ckpt: one-shot — sampling/sort barrier (the q_bm25_stored
-        // pattern): the range partitioner must not re-run the verify
-        .localCheckpoint()
-        .orderBy("id_a", "id_b")
-    }),
-    "fast__q_link_tables" -> ((s, d) => {
+    },
+    "fast__q_link_tables" -> sorted("id_l", "id_r") { (s, d) =>
       val docs = Tables.loadWide(s, d, "documents")
       operators.Dedup.linkTables(docs, "text", "doc_id",
           linkRightTable(docs), "text", "doc_id", maxDist = 10,
           useMd5 = false)
-        // ckpt: one-shot — sampling/sort barrier (the q_bm25_stored
-        // pattern): the range partitioner must not re-run the verify
-        .localCheckpoint()
-        .orderBy("id_l", "id_r")
-    })
+    }
     // NOT here: a fast__ row for the tree-graph lane's leaf-1024
     // operating point (BASELINE.md r13 graphsweep). The md5/xxhash64
     // fast lanes measure a SCALE-INDEPENDENT substitution, so the sf0.1

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.FormattedMode
 
 /** Dumps `.explain("formatted")` for named queries to
@@ -10,6 +10,9 @@ import org.apache.spark.sql.execution.FormattedMode
   * (same master/shuffle width/AQE/SessionTuning as `Bench`), so the
   * committed plan evidence in `plans/` reflects what the bench actually
   * runs. Not part of the driver contract.
+  *
+  * A [[ContractSorted]] query also gets its pre-barrier body's plan in
+  * `<query>_<suffix>_body.txt`.
   *
   * Usage: sbt "runMain graft.PlanDump <outDir> <suffix> <query ...>"
   */
@@ -29,14 +32,19 @@ object PlanDump {
     spark.sparkContext.setLogLevel("WARN")
     val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     Files.createDirectories(Paths.get(outDir))
-    for (q <- names) {
-      val fn = SparkEntry.queries.get(q)
-        .orElse(Bench.fastLanes.get(q))
-        .getOrElse(sys.error(s"unknown query: $q"))
-      val plan = fn(spark, d).queryExecution.explainString(FormattedMode)
-      Files.writeString(Paths.get(s"$outDir/${q}_$suffix.txt"), plan)
-      println(s"[plandump] wrote $outDir/${q}_$suffix.txt")
+    val fns = names.map(q => q -> SparkEntry.queries.get(q)
+      .orElse(Bench.fastLanes.get(q))
+      .getOrElse(sys.error(s"unknown query: $q")))
+    def dump(df: DataFrame, file: String): Unit = {
+      Files.writeString(Paths.get(s"$outDir/$file"),
+        df.queryExecution.explainString(FormattedMode))
+      println(s"[plandump] wrote $outDir/$file")
     }
+    // every body before any declared query: building a declared query
+    // runs its body, and the persists it leaves behind would show up as
+    // cached relations in later body plans
+    for ((q, c: ContractSorted) <- fns) dump(c.body(spark, d), s"${q}_${suffix}_body.txt")
+    for ((q, fn) <- fns) dump(fn(spark, d), s"${q}_$suffix.txt")
     spark.stop()
   }
 }

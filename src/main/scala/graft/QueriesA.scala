@@ -738,14 +738,10 @@ private[graft] object QueriesA extends QueryShared {
     }),
 
     // ---- dedup: MinHash + LSH banding, Jaccard-verified ----
-    "q_dedup_minhash" -> ((s, d) => {
+    "q_dedup_minhash" -> sorted("id_a", "id_b") { (s, d) =>
       Dedup.minhashNearDups(tw(s, d, "documents"), "text", "doc_id",
         numHashes = 16, rowsPerBand = 4, shingleSize = 3, threshold = 0.5)
-        // ckpt: one-shot — sampling/sort barrier (the q_bm25_stored
-        // pattern): the range partitioner must not re-run the verify
-        .localCheckpoint()
-        .orderBy("id_a", "id_b")
-    }),
+    },
 
     // ---- dedup: LSH candidate recall/precision (measure-before-ship) ----
     "q_dedup_recall" -> ((s, d) => {
@@ -770,23 +766,15 @@ private[graft] object QueriesA extends QueryShared {
     }),
 
     // ---- dedup: edit-distance verify on MinHash band candidates ----
-    "q_edit_pairs" -> ((s, d) => {
+    "q_edit_pairs" -> sorted("id_a", "id_b") { (s, d) =>
       Dedup.editDistancePairs(tw(s, d, "documents"), "text", "doc_id",
         maxDist = 10)
-        // ckpt: one-shot — sampling/sort barrier (the q_bm25_stored
-        // pattern): the range partitioner must not re-run the verify
-        .localCheckpoint()
-        .orderBy("id_a", "id_b")
-    }),
+    },
 
     // ---- dedup: SimHash near-dup pairs (chunk banding + Hamming verify) ----
-    "q_simhash_pairs" -> ((s, d) => {
+    "q_simhash_pairs" -> sorted("id_a", "id_b") { (s, d) =>
       Dedup.simhashNearDups(tw(s, d, "documents"), "text", "doc_id", maxDist = 3)
-        // ckpt: one-shot — sampling/sort barrier (the q_bm25_stored
-        // pattern): the range partitioner must not re-run the verify
-        .localCheckpoint()
-        .orderBy("id_a", "id_b")
-    }),
+    },
 
     // ---- deterministic stratified sampling for training mixes ----
     "q_sampling" -> ((s, d) => {
@@ -1235,14 +1223,10 @@ private[graft] object QueriesA extends QueryShared {
     }),
 
     // ---- dedup: exact n-gram Jaccard pairs (sparse baseline, df-cut) ----
-    "q_ngram_jaccard" -> ((s, d) => {
+    "q_ngram_jaccard" -> sorted("id_a", "id_b") { (s, d) =>
       Dedup.ngramJaccardPairs(t(s, d, "documents"), "text", "doc_id",
         shingleSize = 3, threshold = 0.2, maxDf = 100)
-        // ckpt: one-shot — sampling/sort barrier (the q_bm25_stored
-        // pattern): the range partitioner must not re-run the verify
-        .localCheckpoint()
-        .orderBy("id_a", "id_b")
-    }),
+    },
 
     // ---- dedup: n-gram containment pairs (subset/quote detection) ----
     "q_ngram_contain" -> ((s, d) => {
@@ -1359,23 +1343,14 @@ private[graft] object QueriesA extends QueryShared {
     // inline kernel's scores exactly (same integer micro-units). The
     // scoring pass itself is a stateless projection (per-row tf from the
     // token array, driver-side idf constants), the plan a stream runs.
-    "q_bm25_stored" -> ((s, d) => {
+    "q_bm25_stored" -> sorted("query_id", "doc_id") { (s, d) =>
       val dir = s"target/graft-bm25/${d.replaceAll("[^A-Za-z0-9.]", "_")}" +
         f"-${d.hashCode}%08x-$jvmTag"
       val docs = t(s, d, "documents")
       TextAnalysis.buildBm25Stats(docs, "text", dir)
       val stats = TextAnalysis.loadBm25Stats(s, dir, retrievalPanel.flatMap(_._2))
-      // Materialize the match relation BEFORE the oracle contract's global
-      // sort: the range partitioner's sampling pass would otherwise
-      // re-execute the scoring scan (an interpreted array-HOF projection
-      // over the corpus), and the sort a third time — measured 209 s vs
-      // 76 s for the scan alone at the sf10 probe. The sort then pays
-      // match-relation cost only.
       TextAnalysis.bm25ScoreFrom(docs, "text", "doc_id", retrievalPanel, stats)
-        // ckpt: one-shot — sampling/sort barrier, built once per call
-        .localCheckpoint()
-        .orderBy("query_id", "doc_id")
-    }),
+    },
 
     // ---- retrieval: ranking-quality eval panel (recall/MRR/nDCG) ----
     // The measure-before-ship gate for the ranker family: score the LM

@@ -950,22 +950,18 @@ private[graft] object QueriesB extends QueryShared {
     // the records gain a token (small edit), a third are byte-identical,
     // a third are absent — matches at dist 0 AND dist > 0, plus
     // unmatched lefts, all live at every SF.
-    "q_link_tables" -> ((s, d) => {
+    "q_link_tables" -> sorted("id_l", "id_r") { (s, d) =>
       val docs = tw(s, d, "documents")
       Dedup.linkTables(docs, "text", "doc_id", linkRightTable(docs),
           "text", "doc_id", maxDist = 10)
-        // ckpt: one-shot — sampling/sort barrier (the q_bm25_stored
-        // pattern): the range partitioner must not re-run the verify
-        .localCheckpoint()
-        .orderBy("id_l", "id_r")
-    }),
+    },
 
     // ---- linkage against a STORED reference index ----
     // Same output as q_link_tables (identical hash family lives in the
     // stored bands); the cost drops to the delta side's kernel + the
     // candidates-sized verify — the production lane of the accepted
     // q_link_tables inline-kernel artifact (the q_dedup_indexed pattern).
-    "q_link_indexed" -> ((s, d) => {
+    "q_link_indexed" -> sorted("id_l", "id_r") { (s, d) =>
       val docs = tw(s, d, "documents")
       val dir = s"target/graft-link/${d.replaceAll("[^A-Za-z0-9.]", "_")}" +
         f"-${d.hashCode}%08x-$jvmTag"
@@ -976,11 +972,7 @@ private[graft] object QueriesB extends QueryShared {
         Dedup.buildLinkIndex(docs, "text", "doc_id", dir)
       Dedup.linkAgainstIndex(s, dir, linkRightTable(docs), "text", "doc_id",
           maxDist = 10)
-        // ckpt: one-shot — sampling/sort barrier (the q_bm25_stored
-        // pattern): the range partitioner must not re-run the verify
-        .localCheckpoint()
-        .orderBy("id_l", "id_r")
-    }),
+    },
 
     // ---- semantic dedup against a STORED IVF index: the embedding twin
     // of q_dedup_indexed/q_link_indexed — the master prefix (ids ≤
@@ -1126,15 +1118,11 @@ private[graft] object QueriesB extends QueryShared {
     }),
 
     // ---- linkage: blocked Fellegi-Sunter matching across two systems ----
-    "q_er_matches" -> ((s, d) => {
+    "q_er_matches" -> sorted("id_a", "id_b") { (s, d) =>
       val (a, b) = erSides(s, d)
       Linkage.linkPairs(a, b, "rec_id", Seq("nat", "postcode"), erFields,
           threshold = 25L)
-        // ckpt: one-shot — sampling/sort barrier (the q_bm25_stored
-        // pattern): the range partitioner must not re-run the verify
-        .localCheckpoint()
-        .orderBy("id_a", "id_b")
-    }),
+    },
 
     // ---- linkage: precision/recall of the config vs ground truth ----
     "q_er_eval" -> ((s, d) => {
@@ -1171,25 +1159,10 @@ private[graft] object QueriesB extends QueryShared {
     // The loop closed: candidates → EM fit → posterior ≥ ½ patterns →
     // matched pairs with their posterior; the 8-row pattern relation
     // attaches by broadcast, so classification costs one candidate scan.
-    "q_fs_matches" -> ((s, d) => {
+    "q_fs_matches" -> sorted("id_a", "id_b") { (s, d) =>
       val (a, b) = erSides(s, d)
-      val cands = Linkage.blockedCandidates(a, b, "rec_id",
-        Seq("nat", "postcode"), Seq("name", "seg", "band"))
-      def bit(c: Column) = when(c, lit("1")).otherwise(lit("0"))
-      val withPat = cands.select(col("id_a"), col("id_b"),
-        concat(bit(col("a_name") <=> col("b_name")),
-          bit(col("a_seg") <=> col("b_seg")),
-          bit(col("a_band") <=> col("b_band"))).as("pattern"))
-      withPat.join(
-          broadcast(fsEmFit(s, d).patterns.filter(col("is_match"))
-            .select(col("pattern"), col("posterior_nano"))),
-          "pattern")
-        .select(col("id_a"), col("id_b"), col("posterior_nano"))
-        // ckpt: one-shot — sampling/sort barrier (the q_bm25_stored
-        // pattern): the range partitioner must not re-run the verify
-        .localCheckpoint()
-        .orderBy("id_a", "id_b")
-    }),
+      fsMatches(a, b)
+    },
 
     // ---- linkage: the SCALE lane of q_fs_matches — the fixed
     // (nat, postcode) blocking grain grows candidates quadratically with
@@ -1199,25 +1172,10 @@ private[graft] object QueriesB extends QueryShared {
     // pattern): bounded candidates at ANY corpus size, EM fit and
     // classification both on the capped universe, recall priced against
     // the exact twin in BASELINE.md ----
-    "q_fs_matches_scaled" -> ((s, d) => {
+    "q_fs_matches_scaled" -> sorted("id_a", "id_b") { (s, d) =>
       val (a, b) = erSidesCapped(s, d)
-      val cands = Linkage.blockedCandidates(a, b, "rec_id",
-        Seq("nat", "postcode"), Seq("name", "seg", "band"))
-      def bit(c: Column) = when(c, lit("1")).otherwise(lit("0"))
-      val withPat = cands.select(col("id_a"), col("id_b"),
-        concat(bit(col("a_name") <=> col("b_name")),
-          bit(col("a_seg") <=> col("b_seg")),
-          bit(col("a_band") <=> col("b_band"))).as("pattern"))
-      withPat.join(
-          broadcast(fsEmFitOn(a, b).patterns.filter(col("is_match"))
-            .select(col("pattern"), col("posterior_nano"))),
-          "pattern")
-        .select(col("id_a"), col("id_b"), col("posterior_nano"))
-        // ckpt: one-shot — sampling/sort barrier (the q_bm25_stored
-        // pattern): the range partitioner must not re-run the verify
-        .localCheckpoint()
-        .orderBy("id_a", "id_b")
-    }),
+      fsMatches(a, b)
+    },
 
     // ---- graphs: link prediction (common neighbors + RA index) ----
     "q_link_predict" -> ((s, d) => {
@@ -1338,47 +1296,18 @@ private[graft] object QueriesB extends QueryShared {
     // ---- linkage: Jaro-Winkler fuzzy pairs (native codegen expression,
     // blocked self-join, sound letter-multiset prefilter before the
     // scorer -- candidates, never the cross product) ----
-    "q_jaro_pairs" -> ((s, d) => {
-      val p = tw(s, d, "part")
-      val cands = Linkage.blockedCandidates(p, p, "p_partkey",
-          Seq("p_brand"), Seq("p_name"))
-        .filter(col("id_a") < col("id_b"))
-        .filter(Linkage.jaroBound(col("a_p_name"), col("b_p_name"),
-          minJwBp = 9000L))
-      Linkage.fuzzyScorePairs(cands, Seq(("p_name", 1L)))
-        .filter(col("score") >= 9000L)
-        .select(col("id_a"), col("id_b"), col("score").as("jw_bp"))
-        // Materialize the scored pairs BEFORE the oracle contract's global
-        // sort (the q_bm25_stored pattern, guide §3.3): the range
-        // partitioner's sampling pass otherwise re-executes the whole
-        // blocked-JW scorer — OptProbe showed the scorer as twin stages.
-        // At scale that is a full extra corpus pass; the sort then pays
-        // result-relation cost only.
-        // ckpt: one-shot — sampling/sort barrier, built once per call
-        .localCheckpoint()
-        .orderBy("id_a", "id_b")
-    }),
+    "q_jaro_pairs" -> sorted("id_a", "id_b") { (s, d) =>
+      jaroPairs(tw(s, d, "part"))
+    },
 
     // ---- linkage: the SCALE lane of q_jaro_pairs — fixed-category
     // blocking makes candidates grow n² per block, so the production
     // shape caps blocks deterministically (bounded pairs at ANY corpus
     // size; recall trade priced by comparing against the exact twin) ----
-    "q_jaro_scaled" -> ((s, d) => {
-      val capped = Linkage.capBlocks(tw(s, d, "part"), Seq("p_brand"),
-        "p_partkey", cap = 400, useMd5 = true)
-      val cands = Linkage.blockedCandidates(capped, capped, "p_partkey",
-          Seq("p_brand"), Seq("p_name"))
-        .filter(col("id_a") < col("id_b"))
-        .filter(Linkage.jaroBound(col("a_p_name"), col("b_p_name"),
-          minJwBp = 9000L))
-      Linkage.fuzzyScorePairs(cands, Seq(("p_name", 1L)))
-        .filter(col("score") >= 9000L)
-        .select(col("id_a"), col("id_b"), col("score").as("jw_bp"))
-        // ckpt: one-shot — sampling/sort barrier (the q_bm25_stored
-        // pattern): the range partitioner must not re-run the verify
-        .localCheckpoint()
-        .orderBy("id_a", "id_b")
-    }),
+    "q_jaro_scaled" -> sorted("id_a", "id_b") { (s, d) =>
+      jaroPairs(Linkage.capBlocks(tw(s, d, "part"), Seq("p_brand"),
+        "p_partkey", cap = 400, useMd5 = true))
+    },
 
     // ---- eval: Poisson bootstrap replicates (B resamples, ONE scan) ----
     "q_bootstrap" -> ((s, d) => {
@@ -1564,4 +1493,37 @@ private[graft] object QueriesB extends QueryShared {
         .orderBy("grp")
     })
   )
+
+  /** Blocked-candidate pairs of the ER fixture classified by the FS-EM
+    * model fitted on the same sides: each pair's agreement pattern joins
+    * the fit's posterior ≥ ½ patterns (8 rows, broadcast) — q_fs_matches
+    * on the full sides, q_fs_matches_scaled on the block-capped ones. */
+  private def fsMatches(a: DataFrame, b: DataFrame): DataFrame = {
+    val cands = Linkage.blockedCandidates(a, b, "rec_id",
+      Seq("nat", "postcode"), Seq("name", "seg", "band"))
+    def bit(c: Column) = when(c, lit("1")).otherwise(lit("0"))
+    val withPat = cands.select(col("id_a"), col("id_b"),
+      concat(bit(col("a_name") <=> col("b_name")),
+        bit(col("a_seg") <=> col("b_seg")),
+        bit(col("a_band") <=> col("b_band"))).as("pattern"))
+    withPat.join(
+        broadcast(fsEmFitOn(a, b).patterns.filter(col("is_match"))
+          .select(col("pattern"), col("posterior_nano"))),
+        "pattern")
+      .select(col("id_a"), col("id_b"), col("posterior_nano"))
+  }
+
+  /** Jaro-Winkler ≥ 0.9 pairs within a p_brand block of `part` — the
+    * scorer of q_jaro_pairs (all parts) and q_jaro_scaled (capped
+    * blocks). */
+  private def jaroPairs(part: DataFrame): DataFrame = {
+    val cands = Linkage.blockedCandidates(part, part, "p_partkey",
+        Seq("p_brand"), Seq("p_name"))
+      .filter(col("id_a") < col("id_b"))
+      .filter(Linkage.jaroBound(col("a_p_name"), col("b_p_name"),
+        minJwBp = 9000L))
+    Linkage.fuzzyScorePairs(cands, Seq(("p_name", 1L)))
+      .filter(col("score") >= 9000L)
+      .select(col("id_a"), col("id_b"), col("score").as("jw_bp"))
+  }
 }

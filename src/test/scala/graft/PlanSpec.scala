@@ -11,8 +11,12 @@ class PlanSpec extends SparkSpec {
 
   private val d = "/root/testdata/sf0.001"
 
-  private def plan(q: String): String =
-    SparkEntry.queries(q)(spark, d).queryExecution.explainString(FormattedMode)
+  /** The query's plan — for a [[ContractSorted]] entry, its body's plan:
+    * the barrier truncates the declared plan above the kernels. */
+  private def plan(q: String): String = (SparkEntry.queries(q) match {
+    case c: ContractSorted => c.body(spark, d)
+    case f => f(spark, d)
+  }).queryExecution.explainString(FormattedMode)
 
   test("filters and projection push down to the parquet scan") {
     val p = plan("q_filter_events")
@@ -451,18 +455,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("stored-stats BM25 scoring is a pure scan-side projection (the percolator plan)") {
-    // the registry entry localCheckpoints before the contract sort, so
-    // probe the SCORING frame itself (what a stream runs) pre-checkpoint
-    val docs = spark.read.parquet(s"$d/documents.parquet")
-    val dir = java.nio.file.Files.createTempDirectory("planspec-bm25")
-      .toString + "/stats"
-    graft.operators.TextAnalysis.buildBm25Stats(docs, "text", dir)
-    val panel = (new QueryShared {}).retrievalPanel
-    val stats = graft.operators.TextAnalysis.loadBm25Stats(spark, dir,
-      panel.flatMap(_._2))
-    val p = graft.operators.TextAnalysis.bm25ScoreFrom(docs, "text",
-        "doc_id", panel, stats)
-      .queryExecution.explainString(FormattedMode)
+    val p = plan("q_bm25_stored")
     // scan → project → explode → filter, NO exchange at all
     assert(!p.contains("Join"), s"no join in the scoring pass:\n$p")
     assert(!p.contains("Aggregate"), s"no aggregate in the scoring pass:\n$p")
@@ -633,20 +626,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("jaro pairs: candidates ride the brand equi-join — never a cartesian; scan pruned to 3 columns") {
-    // the declared q_jaro_pairs plan truncates at the r14 pre-sort
-    // checkpoint (the double-scorer fix), so the scan/join invariants are
-    // asserted on the scorer relation built exactly as the query builds it
-    import org.apache.spark.sql.functions.col
-    import graft.operators.Linkage
-    val part = Tables.loadWide(spark, d, "part")
-    val cands = Linkage.blockedCandidates(part, part, "p_partkey",
-        Seq("p_brand"), Seq("p_name"))
-      .filter(col("id_a") < col("id_b"))
-      .filter(Linkage.jaroBound(col("a_p_name"), col("b_p_name"),
-        minJwBp = 9000L))
-    val p = Linkage.fuzzyScorePairs(cands, Seq(("p_name", 1L)))
-      .filter(col("score") >= 9000L)
-      .queryExecution.explainString(FormattedMode)
+    val p = plan("q_jaro_pairs")
     assert(!p.contains("CartesianProduct") &&
       !p.contains("BroadcastNestedLoopJoin"),
       s"blocking must stay an equi-join:\n$p")
@@ -654,11 +634,24 @@ class PlanSpec extends SparkSpec {
     assert(readSchema.contains("p_brand") && readSchema.contains("p_name") &&
       !readSchema.contains("p_retailprice"),
       s"scan must prune to the blocked fields:\n$readSchema")
-    // and the declared query itself keeps the sort directly above the
-    // materialization barrier (one scorer execution, guide §3.3)
-    val q = plan("q_jaro_pairs")
-    assert(q.contains("Sort") && q.contains("Scan ExistingRDD"),
-      s"q_jaro_pairs must sort over the checkpoint barrier:\n$q")
+  }
+
+  test("contract-sorted queries sort directly over the materialized body") {
+    // one body execution per query: the range partitioner samples the
+    // checkpointed relation, never the kernel (see ContractSorted)
+    val sorted = (SparkEntry.queries ++ Bench.fastLanes).collect {
+      case (q, c: ContractSorted) => q -> c
+    }
+    assert(sorted.nonEmpty, "no ContractSorted registry entries found")
+    for ((q, c) <- sorted) {
+      val p = c(spark, d).queryExecution.explainString(FormattedMode)
+      val nodes = p.linesIterator.drop(1).takeWhile(_.trim.nonEmpty)
+        .map(_.replaceAll("""^[\s:|+-]*""", "").replaceAll("""\s*\(\d+\)$""", ""))
+        .filterNot(_ == "AdaptiveSparkPlan").toSeq
+      assert(nodes == Seq("Sort", "Exchange", "Scan ExistingRDD") &&
+        p.contains("rangepartitioning"),
+        s"$q must sort over the checkpoint barrier:\n$p")
+    }
   }
 
   test("poisson bootstrap: ONE corpus scan, explode into a combinable agg, no join") {
