@@ -3,7 +3,6 @@ package graft
 import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Optimization-round profiling harness: runs named queries through the
   * noop sink with a stage listener attached, and prints a per-stage cost
@@ -20,11 +19,11 @@ object OptProbe {
     shReadMB: Double, shWriteMB: Double)
 
   def main(args: Array[String]): Unit = {
-    val spark = SessionTuning(SparkSession.builder().master("local[32]")
+    val spark = SessionTuning.builder("local[32]")
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")).getOrCreate()
+      .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val d = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = if (args.length > 1) args.drop(1).toSeq

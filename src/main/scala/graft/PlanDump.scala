@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.FormattedMode
 
 /** Dumps `.explain("formatted")` for named queries to
@@ -21,13 +21,12 @@ object PlanDump {
     require(args.length >= 3, "usage: PlanDump <outDir> <suffix> <query ...>")
     val (outDir, suffix, names) = (args(0), args(1), args.drop(2).toSeq)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SessionTuning(SparkSession.builder()
-      .master(s"local[$cpus]")
+    val spark = SessionTuning.builder(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false"))
+      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")

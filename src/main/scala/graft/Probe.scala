@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Ad-hoc profiling harness: times declared queries twice at a chosen
   * scale factor to split one-time planning/codegen cost from steady-state
   * execution. Not part of the driver contract.
@@ -10,11 +8,11 @@ import org.apache.spark.sql.SparkSession
   */
 object Probe {
   def main(args: Array[String]): Unit = {
-    val spark = SessionTuning(SparkSession.builder().master("local[32]")
+    val spark = SessionTuning.builder("local[32]")
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")).getOrCreate()
+      .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val d = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = if (args.length > 1) args.drop(1).toSeq else SparkEntry.queries.keys.toSeq.sorted

@@ -1,7 +1,6 @@
 package graft.apps
 
 import graft.streaming.Pipelines
-import org.apache.spark.sql.SparkSession
 
 /** Runnable flagship pipeline (SURVEY.md §7.2): replay a directory of raw
   * wikipedia feed events (JSON-per-line, the wikipedia-raw.json shape) as a
@@ -19,8 +18,7 @@ object WikipediaStatsApp {
       sys.error("usage: WikipediaStatsApp <inputDir> [windowLen]"))
     val windowLen = if (args.length > 1) args(1) else "10 seconds"
 
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
+    val spark = graft.SessionTuning.builder(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
       .appName("wikipedia-stats")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")

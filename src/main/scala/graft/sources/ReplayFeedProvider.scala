@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
+import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsAdmissionControl}
 import org.apache.spark.sql.types.{LongType, StringType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -67,19 +67,20 @@ private case class LineOffset(line: Long) extends Offset {
   override def json(): String = line.toString
 }
 
-private class ReplayStream(path: String, linesPerBatch: Int) extends MicroBatchStream {
+private class ReplayStream(path: String, linesPerBatch: Int)
+    extends MicroBatchStream with SupportsAdmissionControl {
   private lazy val total: Long = ReplayFeedProvider.lines(path).length.toLong
 
   override def initialOffset(): Offset = LineOffset(0L)
-  // driver-side "arrival": each trigger poll exposes up to linesPerBatch
-  // more lines. Pacing off the poll (not off commit) keeps
-  // processAllAvailable() live — the engine samples latestOffset before the
-  // previous batch's commit lands.
-  @volatile private var available = 0L
-  override def latestOffset(): Offset = {
-    available = math.min(total, available + linesPerBatch)
-    LineOffset(available)
-  }
+  // "arrival": each trigger exposes up to linesPerBatch lines past the
+  // last planned offset (not the last committed one, which keeps
+  // processAllAvailable() live: the engine samples the next offset before
+  // the previous batch's commit lands). After a restart the engine passes
+  // in the last offset of the checkpoint's offset log, so the replay
+  // resumes where the checkpoint left off, not at line 0.
+  override def latestOffset(start: Offset, limit: ReadLimit): Offset =
+    LineOffset(math.min(total, start.json().toLong + linesPerBatch))
+  override def latestOffset(): Offset = LineOffset(total)
   override def commit(end: Offset): Unit = ()
   override def deserializeOffset(json: String): Offset = LineOffset(json.toLong)
 

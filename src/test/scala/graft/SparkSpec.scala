@@ -14,6 +14,9 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.ui.enabled", "false")
+    // the shipped checkpoint manager; the rest of SessionTuning would change
+    // the scans PlanSpec asserts on
+    .config(SessionTuning.CheckpointFileManagerKey, SessionTuning.checkpointFileManagerClass)
     .getOrCreate()
 
   override def afterAll(): Unit = {

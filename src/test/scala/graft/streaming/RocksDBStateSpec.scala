@@ -24,6 +24,8 @@ class RocksDBStateSpec extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    .config(graft.SessionTuning.CheckpointFileManagerKey,
+      graft.SessionTuning.checkpointFileManagerClass)
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
