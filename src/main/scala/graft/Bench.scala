@@ -93,14 +93,8 @@ object Bench extends QueryShared {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SessionTuning.builder(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = SessionTuning.cpus(4)
+    val spark = SessionTuning.local(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // Warmup: session init, codegen compiler, parquet footer reads.

@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.TextAnalysis
-import org.apache.spark.sql.SparkSession
 
 /** Stage profiler for q_bm25_stored (build vs load vs score vs the full
   * registry lane) — the instrument that located the round-12 sf10
@@ -13,11 +12,7 @@ import org.apache.spark.sql.SparkSession
   * Usage: sbt "runMain graft.Bm25Profile [sfDir]" */
 object Bm25Profile extends QueryShared {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = SessionTuning.local(SessionTuning.cpus(32)).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val d = args.headOption.getOrElse("target/sf1")
     val docs = Tables.load(spark, d, "documents")

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Ad-hoc measurement of the stored-linkage lane's leverage under the
@@ -18,11 +17,7 @@ object LinkLeverageProbe {
   def main(args: Array[String]): Unit = {
     val masterDir = args.headOption.getOrElse("target/sf1")
     val deltaDir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = SessionTuning.local(SessionTuning.cpus(32)).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val master = Tables.load(spark, masterDir, "documents")

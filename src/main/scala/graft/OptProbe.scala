@@ -11,7 +11,11 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
   * guide §1/§7's empirical loop, minus the UI this sandbox can't serve.
   * Not part of the driver contract.
   *
-  * Usage: sbt "runMain graft.OptProbe [sfDir] <queryName ...>"
+  * Each query runs twice and prints `cold=` (planning and codegen
+  * included) and `warm=` (steady-state execution).
+  *
+  * Usage: sbt "runMain graft.OptProbe [sfDir] [queryName ...]" (default:
+  * every query; 32 cores unless SPARK_GRAFT_CPUS says otherwise)
   */
 object OptProbe {
   private case class StageRow(id: Int, name: String, wallMs: Long,
@@ -19,11 +23,7 @@ object OptProbe {
     shReadMB: Double, shWriteMB: Double)
 
   def main(args: Array[String]): Unit = {
-    val spark = SessionTuning.builder("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = SessionTuning.local(SessionTuning.cpus(32)).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val d = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = if (args.length > 1) args.drop(1).toSeq

@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
 /** Regenerates PLANS.md: the formatted physical plans of the headline
@@ -138,11 +137,7 @@ object PlanDoc {
     "q_dbscan_clusters" -> "DBSCAN labels: partition-local union-find contraction (mapPartitions, no shuffle) collapses chains into stars before the flat-checkpointed pointer-doubling loop — global rounds scale with cross-partition hops, not component diameter")
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = SessionTuning.local(4).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val d = "/root/testdata/sf0.001"
     val sb = new StringBuilder

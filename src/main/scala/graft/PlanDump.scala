@@ -7,7 +7,7 @@ import org.apache.spark.sql.execution.FormattedMode
 
 /** Dumps `.explain("formatted")` for named queries to
   * `<outDir>/<query>_<suffix>.txt` under the BENCH session configuration
-  * (same master/shuffle width/AQE/SessionTuning as `Bench`), so the
+  * (the same `SessionTuning` session as `Bench`, 32 cores by default), so the
   * committed plan evidence in `plans/` reflects what the bench actually
   * runs. Not part of the driver contract.
   *
@@ -20,14 +20,7 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     require(args.length >= 3, "usage: PlanDump <outDir> <suffix> <query ...>")
     val (outDir, suffix, names) = (args(0), args(1), args.drop(2).toSeq)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SessionTuning.builder(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SessionTuning.local(SessionTuning.cpus(32)).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     Files.createDirectories(Paths.get(outDir))

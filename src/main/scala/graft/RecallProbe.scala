@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.Similarity
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Recall pricing for the IVF-family `_scaled` lanes against the EXACT
@@ -33,11 +33,7 @@ object RecallProbe {
   private val Flags = Set("knnonly", "sweep", "graphsweep")
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = SessionTuning.local(SessionTuning.cpus(32)).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val d = args.find(!Flags.contains(_)).getOrElse("/root/testdata/sf0.1")
     val emb = Tables.load(spark, d, "embeddings")

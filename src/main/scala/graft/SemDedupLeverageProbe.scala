@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.Similarity
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Ad-hoc measurement of the stored-index SEMANTIC-dedup screen's
@@ -23,11 +22,7 @@ object SemDedupLeverageProbe {
   def main(args: Array[String]): Unit = {
     val masterDir = args.headOption.getOrElse("target/sf1")
     val deltaDir = if (args.length > 1) args(1) else "/root/testdata/sf0.01"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = SessionTuning.local(SessionTuning.cpus(32)).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val master = Tables.load(spark, masterDir, "embeddings")

@@ -2,64 +2,25 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Session-level performance settings shared by every engine entry point
-  * (Bench, Verify, the probes, the shipped apps). One home so the benched
-  * configuration and the oracle-gated configuration cannot drift.
+/** The one place that knows how a graft session is configured: Bench,
+  * Verify, the probes, the shipped apps and the specs all build through
+  * [[local]] or [[builder]], so the benched configuration and the
+  * oracle-gated configuration cannot drift.
   *
-  * The partition and scan values are env-overridable and
-  * scale-parameterised: the defaults are chosen so they are NO-OPs at
-  * production partition sizes and only change behaviour where the local
-  * fixtures' byte sizes mislead a byte-proportional heuristic. The
-  * checkpoint file manager is a constant; it picks its code path by file
-  * system.
+  * Every setting is a constant. AQE stays on (Spark's default) with
+  * Spark's own 1 MiB coalescing floor. AQE sizes post-shuffle partitions by
+  * bytes, and the engine's verify and scoring kernels (thresholded
+  * Levenshtein, Jaro-Winkler, cosine folds, digest loops) are CPU-dense per
+  * byte, so at that floor a sub-MiB candidate shuffle coalesces to one
+  * partition and its verify runs on one core (q_link_tables spent 6.2 of
+  * 9.4 s in two single-task stages). A global 16 KiB floor fixed those
+  * stages (q_link_tables 9.4 → 6.6 s) but taxed the light tail and every
+  * iterative loop's per-round task dispatch (OPTIMIZATION_r13.md: +35 s
+  * across ~250 untouched queries, q_cluster_best 3.4 → 13.6 s). So the
+  * CPU-dense verifies repartition explicitly (`Dedup.spreadPairs`), and
+  * scans feeding CPU-dense kernels are widened by `Tables.loadWide`.
   */
 object SessionTuning {
-
-  /** AQE partition-coalescing floor (optimization guide §2.2/§2.5).
-    *
-    * Why not the 1 MiB default: AQE sizes post-shuffle partitions by
-    * BYTES (`parallelismFirst` honors `minPartitionSize`). The engine's
-    * verify/scoring kernels — thresholded Levenshtein, Jaro-Winkler,
-    * cosine folds, digest loops — are CPU-dense per byte: a candidate
-    * relation of (id_a, id_b) pairs is ~16 bytes/row but carries
-    * O(maxDist·len) edit-distance work per row once texts attach. With
-    * the default floor a sub-MiB candidate shuffle coalesces to ONE
-    * partition and the whole verify serializes onto one core (measured:
-    * q_link_tables spent 6.2 of 9.4 s in two single-task stages).
-    * A 16 KiB floor keeps coalescing adaptive (tiny shuffles still
-    * collapse) while CPU-dense stages spread over the cores.
-    *
-    * Default: Spark's own 1 MiB nonetheless. A GLOBAL 16 KiB floor was
-    * tried first (optimization r13) and won big on the candidate-verify
-    * stages (q_link_tables 9.4 → 6.6 s from the floor alone) but taxed
-    * the suite's light tail and multiplied every iterative loop's
-    * per-round task dispatch (clean full-suite run: +35 s across ~250
-    * untouched queries, q_cluster_best 3.4 → 13.6 s) — so the CPU-dense
-    * verifies get explicit, targeted repartitions instead
-    * (`Dedup.spreadPairs`), and the floor stays at the default. The env
-    * knob remains for experiments. */
-  val minPartitionSize: String =
-    sys.env.getOrElse("SPARK_GRAFT_MIN_PARTITION_SIZE", "1m")
-
-  /** Enables [[Tables]]' scale-adaptive scan conditioning (see the
-    * `conditionScan` scaladoc there): repartition a scan to a
-    * byte-adaptive width — min(8, cores) floor, scaling up with input
-    * bytes, capped at the cores — ONLY when the planner would produce
-    * fewer splits than that width; a no-op decision at production split
-    * counts. */
-  val scanParallelize: String =
-    sys.env.getOrElse("SPARK_GRAFT_SCAN_PARALLELIZE", "true")
-
-  /** Repartition width for conditioned scans; 0 = Tables' byte-adaptive
-    * default (clamp(bytes/targetBytesPerTask, min(8, cores), cores) — see
-    * the width note at `Tables.conditionScan`). */
-  val scanParallelism: String =
-    sys.env.getOrElse("SPARK_GRAFT_SCAN_PARALLELISM", "0")
-
-  /** Bytes of conditioned-scan input per task for the byte-adaptive
-    * width (default 1 MiB; r14 sweep in OPTIMIZATION_r14.md). */
-  val scanTargetBytesPerTask: String =
-    sys.env.getOrElse("SPARK_GRAFT_SCAN_TARGET_BYTES", (1L << 20).toString)
 
   /** Streaming checkpoint writes (offset and commit logs, state-store
     * deltas and snapshots, state schema files) on a local path go through
@@ -79,15 +40,24 @@ object SessionTuning {
   val checkpointFileManagerClass: String =
     classOf[graft.streaming.LocalCheckpointFileManager].getName
 
-  /** A builder for `master` with every setting above. */
-  def builder(master: String): SparkSession.Builder =
-    apply(SparkSession.builder().master(master))
+  /** Local executor threads for a main: `SPARK_GRAFT_CPUS` when set, else
+    * the main's own `default`. */
+  def cpus(default: Int): Int =
+    sys.env.get("SPARK_GRAFT_CPUS").fold(default)(_.trim.toInt)
 
+  /** A `local[cpus]` session with as many shuffle partitions. */
+  def local(cpus: Int): SparkSession.Builder = builder(s"local[$cpus]", cpus)
+
+  /** A session on `master` with `partitions`-way shuffles. */
+  def builder(master: String, partitions: Int): SparkSession.Builder =
+    apply(SparkSession.builder().master(master)
+      .config("spark.sql.shuffle.partitions", partitions.toLong))
+
+  /** The settings every graft session shares (`nanosAsLong`: see
+    * `Tables.load`). */
   def apply(b: SparkSession.Builder): SparkSession.Builder =
-    b.config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        minPartitionSize)
-      .config("spark.graft.scan.parallelize", scanParallelize)
-      .config("spark.graft.scan.parallelism", scanParallelism)
-      .config("spark.graft.scan.targetBytesPerTask", scanTargetBytesPerTask)
+    b.config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.ui.enabled", "false")
       .config(CheckpointFileManagerKey, checkpointFileManagerClass)
 }

@@ -31,10 +31,9 @@ object Tables {
     * consumer too (measured: q_jaro_pairs spent 7.4 of 8.6 s in two
     * single-task stages). When the planned splits cannot feed the cores
     * AND the table is big enough to matter, a round-robin repartition to
-    * defaultParallelism spreads the scan output once, right after the
-    * read.
+    * [[scanWidth]] spreads the scan output once, right after the read.
     *
-    * Scale behaviour: at production sizes (splits >= cores) the
+    * Scale behaviour: at production sizes (splits >= width) the
     * condition is false and NO exchange is added — the repartition is a
     * decision, not a constant. Deterministic under retry: round-robin
     * repartition local-sorts its input first (sortBeforeRepartition,
@@ -43,25 +42,9 @@ object Tables {
     * (OPTIMIZATION_r13.md) showed conditioning every scan wins big on the
     * ~40 CPU-dense kernels (-48 s) but taxes the ~250 light queries with
     * dispatch latency and extra shuffle blocks (+0.1-0.5 s each), so only
-    * the measured winners ask for it. `spark.graft.scan.parallelize=false`
-    * (or env SPARK_GRAFT_SCAN_PARALLELIZE=false) is the kill switch.
-    *
-    * Width (optimization r14, byte-adaptive): a FLOOR of min(8, cores) —
-    * the r13 sweep's winner for the sub-MiB tables, where full-core width
-    * taxes every post-scan shuffle with width × R blocks and width tasks
-    * of dispatch latency — scaling up as bytes/targetBytesPerTask (conf
-    * `spark.graft.scan.targetBytesPerTask`, default 1 MiB) and clamping at
-    * defaultParallelism, so multi-MiB inputs feed all cores instead of
-    * topping out at 8 on a 32-core box. `spark.graft.scan.parallelism`
-    * still overrides the width outright. Malformed conf/env values fall
-    * back to the documented defaults instead of failing the query. */
+    * the measured winners ask for it. */
   private def conditionScan(spark: SparkSession, path: String,
                             df: DataFrame): DataFrame = {
-    def parsed[T](v: Option[String], f: String => T): Option[T] =
-      v.flatMap(s => scala.util.Try(f(s.trim)).toOption)
-    if (!parsed(spark.conf.getOption("spark.graft.scan.parallelize")
-        .orElse(sys.env.get("SPARK_GRAFT_SCAN_PARALLELIZE")), _.toBoolean)
-        .getOrElse(true)) return df
     val (splits, bytes) = splitEstimates.getOrElseUpdate(path, {
       val p = new org.apache.hadoop.fs.Path(path)
       val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
@@ -77,20 +60,28 @@ object Tables {
       }
       (nSplits, nBytes)
     })
-    val cores = spark.sparkContext.defaultParallelism
-    val width = parsed(spark.conf.getOption("spark.graft.scan.parallelism"),
-        _.toInt).filter(_ > 0)
-      .getOrElse {
-        val target = parsed(
-          spark.conf.getOption("spark.graft.scan.targetBytesPerTask"),
-          _.toLong).filter(_ > 0).getOrElse(1L << 20)
-        math.min(cores.toLong,
-          math.max(math.min(8, cores).toLong, bytes / target)).toInt
-      }
-    // tiny tables (dimension lookups) skip: they broadcast anyway, and a
-    // 32-task exchange of 25 rows is pure scheduling overhead
-    if (splits >= width || bytes < 64 * 1024L) df
-    else df.repartition(width)
+    scanWidth(splits, bytes, spark.sparkContext.defaultParallelism)
+      .fold(df)(df.repartition(_))
+  }
+
+  /** The width [[conditionScan]] repartitions a scan of `splits` planned
+    * splits over `bytes` input bytes to on `cores` cores, or None to keep
+    * the planned scan.
+    *
+    * Width (optimization r14, byte-adaptive): a FLOOR of min(8, cores) —
+    * the r13 sweep's winner for the sub-MiB tables, where full-core width
+    * taxes every post-scan shuffle with width × R blocks and width tasks
+    * of dispatch latency — scaling up as one task per MiB and clamping at
+    * the cores, so multi-MiB inputs feed all cores instead of topping out
+    * at 8 on a 32-core box (the per-task target was swept in
+    * OPTIMIZATION_r14.md). Tables under 64 KiB (dimension lookups) keep
+    * their scan: they broadcast anyway, and a 32-task exchange of 25 rows
+    * is pure scheduling overhead. */
+  private[graft] def scanWidth(splits: Long, bytes: Long,
+                               cores: Int): Option[Int] = {
+    val width = math.min(cores.toLong,
+      math.max(math.min(8, cores).toLong, bytes / (1L << 20))).toInt
+    if (splits >= width || bytes < 64 * 1024L) None else Some(width)
   }
 
   /** [[load]] + scale-adaptive input conditioning (see [[conditionScan]])
@@ -105,10 +96,10 @@ object Tables {
     val path = s"$dir/$name.parquet"
     val df = spark.read.parquet(path)
     // events.ts is parquet TIMESTAMP(NANOS), which Spark only reads as a
-    // long (spark.sql.legacy.parquet.nanosAsLong=true, set by our session
-    // builders). Convert to a microsecond timestamp with integer division —
-    // `/ 1000.0` in double would lose precision at 1.7e18 ns — matching
-    // DuckDB's ns→µs truncation exactly.
+    // long (spark.sql.legacy.parquet.nanosAsLong=true, set by SessionTuning).
+    // Convert to a microsecond timestamp with integer division — `/ 1000.0`
+    // in double would lose precision at 1.7e18 ns — matching DuckDB's ns→µs
+    // truncation exactly.
     df.schema.fields.find(_.name == "ts").map(_.dataType) match {
       case Some(LongType) => df.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
       // timestamp[us] with no zone reads as TIMESTAMP_NTZ, which some

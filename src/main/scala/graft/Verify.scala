@@ -8,16 +8,9 @@ object Verify {
     // Optional extra args: query names to dump (default all) — local
     // iteration aid; the driver always passes exactly two args.
     val only = rest.toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // SessionTuning: the oracle gate must run the SAME session settings
     // the bench runs, so correctness is proven for the benched plans
-    val spark = SessionTuning.builder(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SessionTuning.local(SessionTuning.cpus(4)).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries

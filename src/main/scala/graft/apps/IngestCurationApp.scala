@@ -50,10 +50,9 @@ object IngestCurationApp {
     val keepPct = if (args.length > 4) args(4).toInt else 100
     val numShards = if (args.length > 5) args(5).toInt else 4
 
-    val spark = graft.SessionTuning.builder(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
+    val spark = graft.SessionTuning
+      .builder(sys.env.getOrElse("SPARK_MASTER", "local[4]"), 4)
       .appName("ingest-curation")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

@@ -33,12 +33,8 @@ object MixturePlanApp {
     val Array(docsDir, outDir, budgetStr) = args.take(3)
     val weightSpec = if (args.length > 3) args(3) else ""
     val numShards = if (args.length > 4) args(4).toInt else 4
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
+    val spark = graft.SessionTuning
+      .builder(sys.env.getOrElse("SPARK_MASTER", "local[8]"), 8)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     try run(spark, docsDir, outDir, budgetStr.toLong, weightSpec, numShards)

@@ -18,11 +18,9 @@ object WikipediaStatsApp {
       sys.error("usage: WikipediaStatsApp <inputDir> [windowLen]"))
     val windowLen = if (args.length > 1) args(1) else "10 seconds"
 
-    val spark = graft.SessionTuning.builder(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
+    val spark = graft.SessionTuning
+      .builder(sys.env.getOrElse("SPARK_MASTER", "local[4]"), 4)
       .appName("wikipedia-stats")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

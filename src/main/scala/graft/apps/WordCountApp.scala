@@ -1,7 +1,6 @@
 package graft.apps
 
 import graft.sources.Sources
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** The quickstart word-count pipeline (SURVEY.md §2.6 W7: session-windowed
@@ -16,11 +15,9 @@ object WordCountApp {
     val input = args.headOption.getOrElse(sys.error("usage: WordCountApp <file> [gap]"))
     val gap = if (args.length > 1) args(1) else "5 seconds"
 
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
+    val spark = graft.SessionTuning
+      .builder(sys.env.getOrElse("SPARK_MASTER", "local[4]"), 4)
       .appName("wordcount")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

@@ -17,16 +17,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * deployment would configure — not only on the in-memory test provider. */
 class RocksDBStateSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  @transient lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
+  @transient lazy val spark: SparkSession = graft.SessionTuning.local(2)
     .appName("rocksdb-state")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
     .config("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    .config(graft.SessionTuning.CheckpointFileManagerKey,
-      graft.SessionTuning.checkpointFileManagerClass)
-    .config("spark.ui.enabled", "false")
     .getOrCreate()
 
   override def afterAll(): Unit = { spark.stop(); super.afterAll() }
