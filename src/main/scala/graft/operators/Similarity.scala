@@ -1353,8 +1353,8 @@ object Similarity {
 
   /** The (idCol, vecCol, cell) membership relation of
     * [[treeAssignMulti]] — primary leaves plus frozen shadow
-    * memberships, the blocking relation [[semDedupTreeMulti]] and the
-    * recall probes pair over. ≤ (1 + depth) rows per vector. */
+    * memberships, the blocking relation [[semDedupTreeMulti]] pairs
+    * over. ≤ (1 + depth) rows per vector. */
   def treeMultiMemberships(emb: DataFrame, vecCol: String, idCol: String,
                            branch: Int = 16, maxLeaf: Int = 64,
                            maxDepth: Int = 4): DataFrame =

@@ -89,8 +89,8 @@ object Sources {
       .load()
 }
 
-/** Sink factories (SURVEY.md §2.2). K1 kafka, K2 table-upsert, K3 rolled
-  * file blobs, K4 side-effecting writer, K5 memory test sink. */
+/** Sink factories (SURVEY.md §2.2). K1 kafka, K3 rolled file blobs, K5
+  * memory test sink; K2 is `UpsertParquet.sink`, K4 `writeStream.foreachBatch`. */
 object Sinks {
 
   /** K1: serialize all columns to a JSON `value` and produce to a topic. */
@@ -119,11 +119,6 @@ object Sinks {
       .option("path", dir)
       .option("checkpointLocation", checkpoint)
       .option("maxRecordsPerFile", maxRecordsPerFile)
-
-  /** K2/K4: per-micro-batch callback — dimension-table upserts, remote
-    * writes with client lifecycle, anything side-effecting. */
-  def foreachBatchSink[T](ds: Dataset[T])(f: (Dataset[T], Long) => Unit): DataStreamWriter[T] =
-    ds.writeStream.foreachBatch(f)
 
   /** K5: named in-memory sink for assertions. */
   def memory[T](ds: Dataset[T], name: String): DataStreamWriter[T] =

@@ -75,18 +75,6 @@ object Pipelines {
         col("ac.adId").as("adId"))
   }
 
-  /** J2 (snapshot variant): enrich page views with a profile dimension via
-    * broadcast join — the per-micro-batch `foreachBatch` shape when the
-    * dimension is a table; StatefulOps.streamTableJoin is the exact
-    * changelog-ordered variant (StreamTableJoinExample.java:102-146). */
-  def enrichWithProfiles(pageViews: Dataset[PageView], profiles: Dataset[Profile]): Dataset[EnrichedPageView] = {
-    val spark = pageViews.sparkSession
-    import spark.implicits._
-    pageViews.join(broadcast(profiles), "userId")
-      .select(col("userId"), col("company"), col("pageId"))
-      .as[EnrichedPageView]
-  }
-
   /** §3.2 low-level pipeline, fused: raw feed → parse → 10 s window stats.
     * The reference runs this as three Kafka-connected jobs
     * (WikipediaFeed/Parser/StatsStreamTask); under Spark the three stages

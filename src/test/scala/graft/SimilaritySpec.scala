@@ -1254,6 +1254,36 @@ class SimilaritySpec extends SparkSpec {
     assert(Similarity.oversizedCells(multi, "cell", 8192).count() == 0L)
   }
 
+  test("blocked near-dup lanes only prune: every lane's pairs are exact " +
+      "pairs at gate scale (sf0.01, oracle threshold 0.35)") {
+    // Blocking narrows which pairs get compared, never the verify, so each
+    // lane must emit a subset of the all-pairs truth, and one cell holding
+    // every vector must reproduce it. No recall floor: that is data-tuned.
+    val dir = "/root/testdata/sf0.01"
+    assume(new java.io.File(s"$dir/embeddings.parquet").exists())
+    val emb = Tables.load(spark, dir, "embeddings")
+    val (v, id, thr) = ("embedding", "vec_id", 0.35)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("id_a", "id_b", "cos_sim").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq.sorted
+    def blocked(cells: org.apache.spark.sql.DataFrame) =
+      Similarity.blockedNearDupPairs(cells, v, id, "cell", threshold = thr)
+    val exact = rows(Similarity.exactNearDupPairs(emb, v, id, thr))
+    assert(exact.nonEmpty, "the ground truth must hold pairs to test against")
+    val lanes = Seq(
+      "ivf" -> Similarity.ivfNearDupPairs(emb, v, id, Similarity.AutoCells, thr),
+      "ivf_multi" -> Similarity.ivfNearDupPairsMulti(emb, v, id,
+        Similarity.AutoCells, thr, nAssign = 2),
+      "tree" -> blocked(Similarity.treeAssign(emb, v, id)),
+      "tree_multi" -> blocked(Similarity.treeMultiMemberships(emb, v, id)).distinct())
+    for ((lane, pairs) <- lanes) {
+      val outside = rows(pairs).filterNot(exact.toSet)
+      assert(outside.isEmpty,
+        s"$lane: ${outside.size} rows outside the exact pairs, e.g. ${outside.take(5)}")
+    }
+    assert(rows(blocked(emb.withColumn("cell", lit(0)))) == exact)
+  }
+
   /** The nested-posexplode covariance formulation covarianceMatrix replaced
     * in optimization r14 — kept HERE as the equivalence oracle: the Gram
     * aggregate must reproduce it row-for-row, bit-for-bit. */
