@@ -785,7 +785,8 @@ private[graft] trait QueryShared {
   /** Shared PQ CTEs: 4 subspaces × 16-dim slices, codebook = the 16
     * lowest-id vectors' subvectors, assignment by the dot-product-identity
     * distance (every term rides list_dot_product — the bit-exact twin of
-    * VectorFunctions.dot), argmin ties to the smaller code. */
+    * the native `Dot` loop behind VectorFunctions.dot), argmin ties to the
+    * smaller code. */
   private[graft] def pqCodesCtes: String =
     """v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vv FROM embeddings),
       |subs AS (SELECT unnest(generate_series(0, 3)) AS sub),

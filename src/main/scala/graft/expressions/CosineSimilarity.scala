@@ -20,7 +20,9 @@ import org.apache.spark.sql.types._
   *
   * Numerics match the DuckDB oracle's
   * `list_dot_product(a,b)/(sqrt(list_dot_product(a,a))*sqrt(...))` exactly
-  * (same accumulation order, same double ops). Mismatched lengths → null.
+  * (same accumulation order, same double ops). Null contract of [[Dot]]
+  * and the HOF form: a null array, any null element or mismatched lengths
+  * → null.
   */
 case class CosineSimilarity(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -42,7 +44,7 @@ case class CosineSimilarity(left: Expression, right: Expression)
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
-    if (x.numElements() != y.numElements()) null
+    if (x.numElements() != y.numElements() || VectorKernel.anyNull(x) || VectorKernel.anyNull(y)) null
     else {
       var dot = 0.0; var na = 0.0; var nb = 0.0
       var i = 0
@@ -65,7 +67,7 @@ case class CosineSimilarity(left: Expression, right: Expression)
       val na = ctx.freshName("na")
       val nb = ctx.freshName("nb")
       s"""
-         |if ($a.numElements() != $b.numElements()) {
+         |if ($a.numElements() != $b.numElements() || ${VectorKernel.anyNullCall(a, b)}) {
          |  ${ev.isNull} = true;
          |} else {
          |  int $n = $a.numElements();

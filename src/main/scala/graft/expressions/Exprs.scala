@@ -10,6 +10,15 @@ object Exprs {
     ColumnBridge.column(CosineSimilarity(
       ColumnBridge.expression(a), ColumnBridge.expression(b)))
 
+  /** Σ aᵢ·bᵢ in double over array<float|double> (see [[Dot]]). */
+  def dot(a: Column, b: Column): Column =
+    ColumnBridge.column(Dot(ColumnBridge.expression(a), ColumnBridge.expression(b)))
+
+  /** Spark's HALF_UP `round(x, scale)` on a double, bit for bit, without
+    * the per-row BigDecimal (see [[RoundKernel.halfUp]]). */
+  def fastRound(x: Column, scale: Int): Column =
+    ColumnBridge.column(FastRound(ColumnBridge.expression(x), scale))
+
   def wordShingles(text: Column, n: Int): Column =
     ColumnBridge.column(WordShingles(ColumnBridge.expression(text), n))
 

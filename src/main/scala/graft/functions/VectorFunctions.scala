@@ -1,11 +1,12 @@
 package graft.functions
 
+import graft.expressions.Exprs
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Vector math over `array<float>` embedding columns, as pure Catalyst
-  * higher-order-function expressions (zip_with / aggregate) — no UDFs, no
-  * driver-side math, fully distributable.
+/** Vector math over embedding columns (`array<float>`; `array<double>` is
+  * accepted too): the dot product and random-hyperplane LSH buckets, as
+  * native Catalyst expressions — no UDFs, no driver-side math.
   *
   * Accumulation is left-to-right in double precision, which matches DuckDB's
   * `list_dot_product(CAST(v AS DOUBLE[]), ...)` bit-for-bit on the oracle
@@ -13,16 +14,8 @@ import org.apache.spark.sql.functions._
   */
 object VectorFunctions {
 
-  /** Σ aᵢ·bᵢ in double precision. */
-  def dot(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0),
-      (acc, x) => acc + x)
-
-  def norm(a: Column): Column = sqrt(dot(a, a))
-
-  def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
+  /** Σ aᵢ·bᵢ in double precision: the codegen'd [[graft.expressions.Dot]]. */
+  def dot(a: Column, b: Column): Column = Exprs.dot(a, b)
 
   /** Random-hyperplane LSH bucket for approximate nearest neighbour: the
     * sign pattern of `bits` pseudo-random projections. Hyperplane j's

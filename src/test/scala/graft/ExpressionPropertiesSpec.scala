@@ -1,7 +1,11 @@
 package graft
 
 import graft.expressions.{Exprs, ShingleKernel}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.execution.WholeStageCodegenExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -41,21 +45,157 @@ class ExpressionPropertiesSpec extends SparkSpec {
     }
   }
 
+  /** The replaced composable dot product, kept as the reference. */
+  private def hofDot(a: Column, b: Column): Column =
+    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
+      lit(0.0), (acc, x) => acc + x)
+
+  /** Runs `body` once interpreted and once in whole-stage codegen. */
+  private def inBothModes(body: String => Unit): Unit =
+    for ((mode, wholeStage) <- Seq("NO_CODEGEN" -> "false", "CODEGEN_ONLY" -> "true")) {
+      spark.conf.set("spark.sql.codegen.factoryMode", mode)
+      spark.conf.set("spark.sql.codegen.wholeStage", wholeStage)
+      try body(mode)
+      finally {
+        spark.conf.unset("spark.sql.codegen.factoryMode")
+        spark.conf.unset("spark.sql.codegen.wholeStage")
+      }
+    }
+
+  /** An RDD-backed frame: no local-relation or constant folding, so the
+    * projection runs in the mode under test. */
+  private def frame(rows: Seq[Row], schema: StructType): DataFrame =
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 4), schema)
+
+  /** Collects `df` and asserts the codegen mode ran as asked. */
+  private def collectIn(mode: String, df: DataFrame): Array[Row] = {
+    val out = df.collect()
+    val fused = (new AdaptiveSparkPlanHelper {})
+      .find(df.queryExecution.executedPlan)(_.isInstanceOf[WholeStageCodegenExec]).isDefined
+    assert(fused == (mode == "CODEGEN_ONLY"), s"$mode plan:\n${df.queryExecution.executedPlan}")
+    out
+  }
+
+  /** Null-aware bit equality (-0.0 differs from +0.0; NaNs are one). */
+  private def bits(r: Row, i: Int): Option[Long] =
+    if (r.isNullAt(i)) None else Some(java.lang.Double.doubleToLongBits(r.getDouble(i)))
+
   test("CosineSimilarity expression equals the HOF formulation on random vectors") {
-    import spark.implicits._
-    val vecs = Seq.tabulate(50)(i =>
-      (i.toLong, Array.tabulate(16)(j => math.sin(i * 17 + j * 3).toFloat)))
-      .toDF("id", "v")
-    val both = vecs.as("a").crossJoin(vecs.as("b"))
-      .select(
-        Exprs.cosineSim(col("a.v"), col("b.v")).as("native"),
-        (aggregate(zip_with(col("a.v"), col("b.v"), (x, y) => x.cast("double") * y.cast("double")),
-          lit(0.0), (acc, x) => acc + x) /
-          (sqrt(aggregate(zip_with(col("a.v"), col("a.v"), (x, y) => x.cast("double") * y.cast("double")), lit(0.0), (acc, x) => acc + x)) *
-           sqrt(aggregate(zip_with(col("b.v"), col("b.v"), (x, y) => x.cast("double") * y.cast("double")), lit(0.0), (acc, x) => acc + x)))).as("hof"))
-      .select(max(abs(col("native") - col("hof"))).as("maxdiff"))
-      .as[Double].collect()(0)
-    assert(both == 0.0, s"native and HOF cosine must be bit-identical, max diff $both")
+    val vec = (i: Int) => Array.tabulate(16)(j => math.sin(i * 17 + j * 3).toFloat: java.lang.Float)
+    val schema = StructType(Seq(StructField("id", LongType),
+      StructField("v", ArrayType(FloatType, containsNull = true))))
+    val rows = Seq.tabulate(50)(i => Row(i.toLong, vec(i).toSeq)) :+
+      Row(50L, vec(50).toSeq.updated(5, null)) // a null element: both forms give null
+    inBothModes { mode =>
+      val vecs = frame(rows, schema)
+      val got = collectIn(mode, vecs.as("a").crossJoin(vecs.as("b"))
+        .select(col("a.id"), col("b.id"),
+          Exprs.cosineSim(col("a.v"), col("b.v")).as("native"),
+          (hofDot(col("a.v"), col("b.v")) /
+            (sqrt(hofDot(col("a.v"), col("a.v"))) * sqrt(hofDot(col("b.v"), col("b.v"))))).as("hof")))
+      assert(got.length == 51 * 51)
+      got.foreach { r =>
+        assert(bits(r, 2) == bits(r, 3), s"$mode pair (${r.getLong(0)}, ${r.getLong(1)})")
+        assert(r.isNullAt(2) == (r.getLong(0) == 50L || r.getLong(1) == 50L))
+      }
+    }
+  }
+
+  test("Dot equals the aggregate(zip_with) form bit for bit, float and float x double; " +
+      "empty, mismatch, null element, null array and -0.0 products") {
+    val rng = new scala.util.Random(11)
+    def floats(n: Int) = Seq.fill(n)((rng.nextGaussian() * math.pow(10, rng.nextInt(7) - 3)).toFloat: java.lang.Float)
+    def doubles(n: Int) = Seq.fill(n)(rng.nextGaussian() * 1e3 - 1.5: java.lang.Double)
+    val nf = Seq[java.lang.Float](-0.0f, 0.0f, -0.0f, 3.0f)
+    val edge = Seq[(Seq[java.lang.Float], Seq[java.lang.Float], Seq[java.lang.Double], Option[Double])](
+      (Nil, Nil, Nil, Some(0.0)),                                          // empty
+      (floats(3), floats(4), doubles(5), None),                            // mismatch
+      (floats(2) :+ null, floats(3), doubles(2) :+ null, None),            // null element
+      (null, floats(3), null, None),                                       // null array
+      (nf, nf.reverse, Seq[java.lang.Double](0.0, -0.0, -0.0, 0.0), Some(0.0)), // -0.0 products
+      (Seq[java.lang.Float](-0.0f), Seq[java.lang.Float](0.0f), Seq[java.lang.Double](-0.0), Some(0.0)))
+    val random = Seq.tabulate(400) { i =>
+      val n = i % 70
+      (floats(n), floats(n), doubles(n), Option.empty[Double])
+    }
+    val all = edge ++ random
+    val schema = StructType(Seq(StructField("id", IntegerType),
+      StructField("a", ArrayType(FloatType, containsNull = true)),
+      StructField("b", ArrayType(FloatType, containsNull = true)),
+      StructField("c", ArrayType(DoubleType, containsNull = true))))
+    val rows = all.zipWithIndex.map { case ((a, b, c, _), i) => Row(i, a, b, c) }
+    // an array built in the projection: null on even ids
+    val built = array(col("id").cast("float"),
+      when(col("id") % 2 === 0, lit(null).cast("float")).otherwise(lit(-0.5f)))
+    inBothModes { mode =>
+      val got = collectIn(mode, frame(rows, schema).select(col("id"),
+        Exprs.dot(col("a"), col("b")), hofDot(col("a"), col("b")),
+        Exprs.dot(col("a"), col("c")), hofDot(col("a"), col("c")),
+        Exprs.dot(col("c"), col("a")), hofDot(col("c"), col("a")),
+        Exprs.dot(built, built), hofDot(built, built)))
+      assert(got.length == all.length)
+      got.foreach { r =>
+        val id = r.getInt(0)
+        Seq(1, 3, 5, 7).foreach(k => assert(bits(r, k) == bits(r, k + 1), s"$mode row $id col $k"))
+        assert(r.isNullAt(7) == (id % 2 == 0), s"$mode row $id built array")
+        if (id < edge.length) {
+          val want = edge(id)._4.map(java.lang.Double.doubleToLongBits)
+          assert(bits(r, 1) == want, s"$mode edge row $id: ${r.get(1)}")
+          assert(bits(r, 3) == want, s"$mode edge row $id (float x double): ${r.get(3)}")
+        }
+      }
+    }
+  }
+
+  test("fast round equals Spark's round bit for bit at scales 0-6: random, ties, " +
+      "near-ties, signed zeros, subnormals, NaN, Inf, and magnitudes near 2^53 and 1e15") {
+    val rng = new scala.util.Random(13)
+    val scales = 0 to 6
+    def around(v: Double): Seq[Double] =
+      Iterator.iterate(v)(java.lang.Math.nextUp(_: Double)).slice(1, 4).toSeq ++
+        Iterator.iterate(v)(java.lang.Math.nextDown(_: Double)).take(4).toSeq
+    val ties = for {
+      s <- scales; _ <- 1 to 200
+      k = rng.nextInt(1000000).toDouble
+      t = (k + 0.5) / math.pow(10, s)
+      v <- around(t)
+    } yield v
+    val edges = for {
+      s <- scales
+      base <- Seq(9007199254740992.0, 1e15)
+      v0 = base / math.pow(10, s)
+      v <- around(v0) ++ around(math.floor(v0) + 0.5) ++ around(v0 - 0.5 / math.pow(10, s))
+    } yield v
+    val specials = Seq(0.0, -0.0, Double.MinPositiveValue, -Double.MinPositiveValue,
+      java.lang.Double.MIN_NORMAL, java.lang.Math.nextDown(java.lang.Double.MIN_NORMAL), 1e-310,
+      Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity, Double.MaxValue,
+      -Double.MaxValue, 1.00005, -1.00005, 0.12345, -0.12345, 0.5, 1.5, 2.5, -0.5,
+      0.00005, 0.49999999999999994, 4.35, 1.005, 2.675)
+    val random =
+      Seq.fill(4000)(rng.nextDouble() * 2000 - 1000) ++
+      Seq.fill(3000)((rng.nextDouble() * 2 - 1) * math.pow(10, -rng.nextInt(9))) ++
+      Seq.fill(2000)(rng.nextLong() / math.pow(10, rng.nextInt(19))) ++
+      Seq.fill(2000)(rng.nextInt(10000000).toDouble / math.pow(10, rng.nextInt(9))) ++
+      Seq.fill(2000)(java.lang.Double.longBitsToDouble(rng.nextLong()))
+    val xs = (specials ++ ties ++ edges ++ random).flatMap(v => Seq(v, -v))
+    val rows = xs.zipWithIndex.map { case (v, i) => Row(i, v) }
+    val schema = StructType(Seq(StructField("id", IntegerType), StructField("x", DoubleType)))
+    inBothModes { mode =>
+      val got = collectIn(mode, frame(rows, schema).select(col("id") +:
+        scales.flatMap(s => Seq(Exprs.fastRound(col("x"), s), round(col("x"), s))): _*))
+      assert(got.length == xs.length)
+      got.foreach { r =>
+        scales.foreach { s =>
+          val k = 1 + 2 * s
+          assert(bits(r, k) == bits(r, k + 1),
+            s"$mode x=${xs(r.getInt(0))} s=$s: fast ${r.get(k)} vs round ${r.get(k + 1)}")
+        }
+      }
+    }
+    val dec = spark.range(1).select(lit(BigDecimal("1.23456")).as("d"))
+    intercept[org.apache.spark.sql.AnalysisException] {
+      dec.select(Exprs.fastRound(col("d"), 2)).collect()
+    }
   }
 
   test("wikipedia parser round-trips generated well-formed lines") {

@@ -766,4 +766,39 @@ class PlanSpec extends SparkSpec {
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
       "sizes-bits join must stay a doc-keyed equi-join")
   }
+
+  test("vector kernels score with native dot and fast_round inside whole-stage codegen — " +
+      "no lambda, no Spark round on the candidate scores") {
+    for (q <- Seq("q_pq_codes", "q_neardup_cosine")) {
+      val df = SparkEntry.queries(q) match {
+        case c: ContractSorted => c.body(spark, d)
+        case f => f(spark, d)
+      }
+      df.collect() // the executed (final adaptive) plan, not the initial one
+      val p = df.queryExecution.explainString(FormattedMode)
+      // node ids of the final adaptive plan (its initial plan carries no
+      // codegen ids), then their "(n) Name [codegen id : k]" detail blocks
+      val tree = p.split("\n\n").head
+      val fin = tree.indexOf("== Initial Plan ==") match {
+        case -1 => tree
+        case i => tree.substring(0, i)
+      }
+      val id = """\((\d+)\)""".r
+      val finalIds = id.findAllMatchIn(fin).map(_.group(1)).toSet
+      val nodes = p.split("\n\n").map(_.trim)
+        .filter(n => id.findPrefixMatchOf(n).exists(m => finalIds(m.group(1))))
+      val scoring = nodes.filter(n => n.contains("dot(") || n.contains("cosine_sim("))
+      assert(scoring.nonEmpty, s"$q: no scoring node found:\n$p")
+      scoring.foreach { n =>
+        assert(n.linesIterator.next().contains("[codegen id :"),
+          s"$q: the scoring node must sit inside whole-stage codegen:\n$n")
+        assert(n.contains("fast_round("), s"$q: scores must round with fast_round:\n$n")
+      }
+      assert(!Seq("lambdafunction", "zip_with(").exists(p.contains) &&
+        """(?<![\w])aggregate\(""".r.findFirstIn(p).isEmpty,
+        s"$q: no higher-order-function lambda may remain in the plan:\n$p")
+      assert("""(?<![\w])round\(""".r.findFirstIn(scoring.mkString("\n")).isEmpty,
+        s"$q: Spark's BigDecimal round must not score candidates:\n${scoring.mkString("\n\n")}")
+    }
+  }
 }
