@@ -469,8 +469,7 @@ private[graft] object QueriesA extends QueryShared {
     // additive totals) — same oracle SQL by design.
     "q_quantile_stored" -> ((s, d) => {
       import graft.streaming.SketchMaintenance
-      val dir = s"target/graft-qsamp/${d.replaceAll("[^A-Za-z0-9.]", "_")}" +
-        f"-${d.hashCode}%08x-$jvmTag"
+      val dir = storeDir("qsamp", d)
       val marker = new org.apache.hadoop.fs.Path(dir + "/_SUCCESS")
       if (!marker.getFileSystem(s.sessionState.newHadoopConf()).exists(marker)) {
         val ev = t(s, d, "events")
@@ -537,8 +536,7 @@ private[graft] object QueriesA extends QueryShared {
     // oracle SQL as q_split_leakage by design.
     "q_leakage_indexed" -> ((s, d) => {
       val docs = t(s, d, "documents")
-      val dir = s"target/graft-clusters/${d.replaceAll("[^A-Za-z0-9.]", "_")}" +
-        f"-${d.hashCode}%08x-$jvmTag"
+      val dir = storeDir("clusters", d)
       val p = new org.apache.hadoop.fs.Path(dir + "/_SUCCESS")
       if (!p.getFileSystem(s.sessionState.newHadoopConf()).exists(p))
         Dedup.buildClusterTable(docs, "text", "doc_id", dir)
@@ -756,8 +754,7 @@ private[graft] object QueriesA extends QueryShared {
     // under min-of-reps), the pairs pass joins the stored relations.
     // Same oracle SQL as q_dedup_minhash by design.
     "q_dedup_indexed" -> ((s, d) => {
-      val dir = s"target/graft-dedup/${d.replaceAll("[^A-Za-z0-9.]", "_")}" +
-        f"-${d.hashCode}%08x-$jvmTag"
+      val dir = storeDir("dedup", d)
       val marker = new org.apache.hadoop.fs.Path(dir + "/shingles/_SUCCESS")
       if (!marker.getFileSystem(s.sessionState.newHadoopConf()).exists(marker))
         Dedup.buildDedupIndex(t(s, d, "documents"), "text", "doc_id", dir)
@@ -825,8 +822,7 @@ private[graft] object QueriesA extends QueryShared {
       val emb = t(s, d, "embeddings")
       val refined = Similarity.kmeansCentroids(emb, "embedding", "vec_id",
         k = 8, iters = 2)
-      val idx = s"target/graft-ivf/${d.replaceAll("[^A-Za-z0-9.]", "_")}" +
-        f"-${d.hashCode}%08x-$jvmTag-refined"
+      val idx = storeDir("ivf", d, "-refined")
       Similarity.buildIvfIndexWith(emb, "embedding", "vec_id", refined, idx)
       Similarity.ivfProbeById(s, idx, "embedding", "vec_id",
         queryId = 0L, k = 10, nprobe = 2)
@@ -890,8 +886,7 @@ private[graft] object QueriesA extends QueryShared {
     // q_curation by design: stored labels ≡ inline labels.
     "q_curation_indexed" -> ((s, d) => {
       val docs = tw(s, d, "documents")
-      val dir = s"target/graft-clusters/${d.replaceAll("[^A-Za-z0-9.]", "_")}" +
-        f"-${d.hashCode}%08x-$jvmTag"
+      val dir = storeDir("clusters", d)
       val p = new org.apache.hadoop.fs.Path(dir + "/_SUCCESS")
       if (!p.getFileSystem(s.sessionState.newHadoopConf()).exists(p))
         Dedup.buildClusterTable(docs, "text", "doc_id", dir)
@@ -1344,8 +1339,7 @@ private[graft] object QueriesA extends QueryShared {
     // scoring pass itself is a stateless projection (per-row tf from the
     // token array, driver-side idf constants), the plan a stream runs.
     "q_bm25_stored" -> sorted("query_id", "doc_id") { (s, d) =>
-      val dir = s"target/graft-bm25/${d.replaceAll("[^A-Za-z0-9.]", "_")}" +
-        f"-${d.hashCode}%08x-$jvmTag"
+      val dir = storeDir("bm25", d)
       val docs = t(s, d, "documents")
       TextAnalysis.buildBm25Stats(docs, "text", dir)
       val stats = TextAnalysis.loadBm25Stats(s, dir, retrievalPanel.flatMap(_._2))
@@ -1550,8 +1544,7 @@ private[graft] object QueriesA extends QueryShared {
       // the test suite's plan() probe) from racing overwrite-mode writes
       // against each other's reads. Within one JVM the dir is stable, so
       // repeated calls rebuild in place as intended.
-      val idx = s"target/graft-ivf/${d.replaceAll("[^A-Za-z0-9.]", "_")}" +
-        f"-${d.hashCode}%08x-$jvmTag"
+      val idx = storeDir("ivf", d)
       Similarity.buildIvfIndex(t(s, d, "embeddings"), "embedding", "vec_id",
         kCentroids = 8, indexDir = idx)
       Similarity.ivfProbeById(s, idx, "embedding", "vec_id",
@@ -1564,8 +1557,7 @@ private[graft] object QueriesA extends QueryShared {
     // ADC scoring off the stored codebook. Same scratch-dir discipline
     // as q_ivf_topk.
     "q_ivfpq_topk" -> ((s, d) => {
-      val idx = s"target/graft-ivfpq/${d.replaceAll("[^A-Za-z0-9.]", "_")}" +
-        f"-${d.hashCode}%08x-$jvmTag"
+      val idx = storeDir("ivfpq", d)
       val emb = tw(s, d, "embeddings")
       Similarity.buildIvfPqIndex(emb, "embedding", "vec_id",
         kCentroids = 8, m = 4, kCodes = 16, dim = 64, indexDir = idx)
@@ -1583,8 +1575,7 @@ private[graft] object QueriesA extends QueryShared {
     // needs before committing an nprobe to a 100 TB corpus.
     "q_ann_recall" -> ((s, d) => {
       val emb = t(s, d, "embeddings")
-      val idx = s"target/graft-ivf/${d.replaceAll("[^A-Za-z0-9.]", "_")}" +
-        f"-${d.hashCode}%08x-$jvmTag-recall"
+      val idx = storeDir("ivf", d, "-recall")
       // build once per (dataset, JVM): the recall math is the measurement,
       // the index is its input artifact (q_ivf_topk keeps the
       // build-inclusive accounting for the build lifecycle itself);
@@ -1604,8 +1595,7 @@ private[graft] object QueriesA extends QueryShared {
     // ---- similarity: batched IVF probe (one pruned scan, whole panel) ----
     "q_ivf_batch" -> ((s, d) => {
       val emb = t(s, d, "embeddings")
-      val idx = s"target/graft-ivf/${d.replaceAll("[^A-Za-z0-9.]", "_")}" +
-        f"-${d.hashCode}%08x-$jvmTag-batch"
+      val idx = storeDir("ivf", d, "-batch")
       if (!Similarity.ivfIndexCommitted(s, idx))
         Similarity.buildIvfIndex(emb, "embedding", "vec_id", kCentroids = 8, idx)
       Similarity.ivfProbeBatch(s, idx, "embedding", "vec_id",

@@ -963,8 +963,7 @@ private[graft] object QueriesB extends QueryShared {
     // q_link_tables inline-kernel artifact (the q_dedup_indexed pattern).
     "q_link_indexed" -> sorted("id_l", "id_r") { (s, d) =>
       val docs = tw(s, d, "documents")
-      val dir = s"target/graft-link/${d.replaceAll("[^A-Za-z0-9.]", "_")}" +
-        f"-${d.hashCode}%08x-$jvmTag"
+      val dir = storeDir("link", d)
       // bands is the LAST half buildLinkIndex writes (texts-first crash
       // ordering), so its marker proves the whole build committed
       val marker = new org.apache.hadoop.fs.Path(dir + "/bands/_SUCCESS")
@@ -984,8 +983,7 @@ private[graft] object QueriesB extends QueryShared {
     "q_semdedup_indexed" -> ((s, d) => {
       val emb = tw(s, d, "embeddings")
       val cut = emb.agg(max(col("vec_id"))).head.getLong(0) * 2 / 3
-      val dir = s"target/graft-semidx/${d.replaceAll("[^A-Za-z0-9.]", "_")}" +
-        f"-${d.hashCode}%08x-$jvmTag"
+      val dir = storeDir("semidx", d)
       if (!Similarity.ivfIndexCommitted(s, dir))
         Similarity.buildIvfIndex(emb.filter(col("vec_id") <= cut),
           "embedding", "vec_id", kCentroids = 8, indexDir = dir)
@@ -1003,8 +1001,7 @@ private[graft] object QueriesB extends QueryShared {
     "q_semdedup_indexed_scaled" -> ((s, d) => {
       val emb = t(s, d, "embeddings")
       val cut = emb.agg(max(col("vec_id"))).head.getLong(0) * 2 / 3
-      val dir = s"target/graft-semidxsc/${d.replaceAll("[^A-Za-z0-9.]", "_")}" +
-        f"-${d.hashCode}%08x-$jvmTag"
+      val dir = storeDir("semidxsc", d)
       if (!Similarity.ivfIndexCommitted(s, dir))
         Similarity.buildIvfIndex(emb.filter(col("vec_id") <= cut),
           "embedding", "vec_id", kCentroids = Similarity.AutoCells,

@@ -33,6 +33,17 @@ private[graft] trait QueryShared {
     * processes writing mode=overwrite never race each other's reads. */
   private[graft] val jvmTag: String = java.util.UUID.randomUUID().toString.take(8)
 
+  /** The directory a stored-index query of `kind` keeps for data dir `d`:
+    * `target/graft-<kind>/<d's name chars>-<d's hash>-<jvmTag><suffix>`.
+    * Leading `_` and `.` are dropped from the leaf, which Spark would
+    * otherwise treat as a hidden path (`All paths were ignored`) — as it
+    * did for every absolute `d`, whose `/` became a leading `_`. */
+  private[graft] def storeDir(kind: String, d: String, suffix: String = ""): String = {
+    val stem = d.replaceAll("[^A-Za-z0-9.]", "_").dropWhile(c => c == '_' || c == '.')
+    s"target/graft-$kind/${if (stem.isEmpty) "data" else stem}" +
+      f"-${d.hashCode}%08x-$jvmTag$suffix"
+  }
+
   /** Money arithmetic in integer cents — exact (data is 2dp, magnitudes
     * < 1e6, so sums stay far below 2^53 even at 100× scale), invariant to
     * partitioning / summation order, identical to the DuckDB oracle's

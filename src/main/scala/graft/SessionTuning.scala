@@ -40,6 +40,24 @@ object SessionTuning {
   val checkpointFileManagerClass: String =
     classOf[graft.streaming.LocalCheckpointFileManager].getName
 
+  /** Per-session artifact isolation is off, so the tasks of every session
+    * run under the executors' one default class loader.
+    *
+    * Why: Spark's codegen cache is keyed by (class loader, source). With
+    * isolation on (Spark 4's default), each session gets its own executor
+    * class loader, and every streaming query runs on a cloned session, as
+    * does `Dedup.nearDupClusters`'s loop (`cloneSession`). Each query or
+    * restart thus compiled again, under a new loader, classes whose source
+    * was byte-identical to the last query's. Measured on `stream_replay`
+    * (4 cores): 115 classes compiled per timed pass of the six pipelines,
+    * against 10 in the first pass and 0 in the second with one loader;
+    * traced `exec.codegen_compile_ms` 1,118 → 43 ms and `latency_p50_ms`
+    * 403 → 299 ms (BASELINE.md). Graft adds no session artifacts (no
+    * `addArtifact` or `addJar`), so nothing depends on the isolation. The
+    * setting is read only when a session is created: a session built
+    * outside [[apply]] brings the recompiles back. */
+  val ArtifactIsolationKey = "spark.sql.artifact.isolation.enabled"
+
   /** Local executor threads for a main: `SPARK_GRAFT_CPUS` when set, else
     * the main's own `default`. */
   def cpus(default: Int): Int =
@@ -60,4 +78,5 @@ object SessionTuning {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
       .config(CheckpointFileManagerKey, checkpointFileManagerClass)
+      .config(ArtifactIsolationKey, "false")
 }

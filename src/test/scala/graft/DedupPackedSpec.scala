@@ -52,6 +52,21 @@ class DedupPackedSpec extends SparkSpec {
     assert(planNodes <= 3, s"expected flat checkpointed lineage, got $planNodes plan nodes")
   }
 
+  test("nearDupClusters: a second call on the same pairs compiles no class") {
+    // The loop runs on a cloneSession child, a new session per call. AQE is
+    // off so that both calls run one plan: AQE may turn a join into a
+    // broadcast join from run-time sizes, and a new plan is new source.
+    val pairs = (0L until 19L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val (first, firstCompiled) = classesCompiled(Dedup.nearDupClusters(pairs).collect().toSet)
+      val (again, compiled) = classesCompiled(Dedup.nearDupClusters(pairs).collect().toSet)
+      info(s"classes compiled: first call $firstCompiled, second call $compiled")
+      assert(again == first)
+      assert(compiled == 0, s"the second call compiled $compiled classes")
+    } finally spark.conf.unset("spark.sql.adaptive.enabled")
+  }
+
   test("nearDupClusters strict mode throws on maxIters exhaustion; lax mode only warns") {
     // A 200-node path cannot fully propagate (or even confirm a fixpoint)
     // in a single round, so maxIters = 1 always exhausts.

@@ -80,6 +80,22 @@ class ReplayRestartSpec extends SparkSpec {
   private def cp(): String = Files.createTempDirectory("cp_restart").toString
 
   for (leg <- legs) {
+    // Every streaming query runs on a cloned session; with Spark's per-session
+    // artifact isolation each clone gets its own class loader and recompiles
+    // what the last query compiled (SessionTuning.ArtifactIsolationKey).
+    test(s"${leg.name}: an identical second run on a fresh checkpoint compiles no class") {
+      def run(): (Seq[String], Long) = classesCompiled {
+        val out = mutable.Map.empty[Long, Seq[String]]
+        incarnation(leg, cp(), Ours, out)
+        rows(out)
+      }
+      val (first, firstCompiled) = run()
+      val (again, compiled) = run()
+      info(s"classes compiled: first run $firstCompiled, second run $compiled")
+      assert(first.nonEmpty && again == first)
+      assert(compiled == 0, s"the second run compiled $compiled classes")
+    }
+
     lazy val uninterrupted = {
       val out = mutable.Map.empty[Long, Seq[String]]
       incarnation(leg, cp(), Stock, out)
