@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-
 /** Benchmark main: runs every declared query against
   * SPARK_GRAFT_SF_DIR and prints one JSON line with per-query seconds.
   *
@@ -10,37 +8,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * materialized through the `noop` sink — unlike count(), noop cannot be
   * shortcut by count-only column pruning, so every expression in the plan
   * actually executes. */
-object Bench extends QueryShared {
-  /** PRODUCTION fast lanes, benchmarked alongside the oracle suite under
-    * `fast__`-prefixed names: the pinned q_link_tables / q_dedup_minhash
-    * numbers charge the md5 ORACLE-LANE digest kernel (DuckDB has no
-    * xxhash64, so the twin-reproducible lane pays ~2.4M md5 digests),
-    * while production runs the xxhash64 lane — equivalence is spec-pinned
-    * (`DedupSpec`/`DedupPackedSpec` dual-lane tests), these rows just make
-    * the pin show what production would pay. NOT part of the oracle
-    * contract (no DuckDB twin can replay xxhash64), hence registered here
-    * and not in `SparkEntry.queries`. */
-  private[graft] val fastLanes: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "fast__q_dedup_minhash" -> sorted("id_a", "id_b") { (s, d) =>
-      operators.Dedup.minhashNearDups(Tables.loadWide(s, d, "documents"),
-          "text", "doc_id", numHashes = 16, rowsPerBand = 4,
-          shingleSize = 3, threshold = 0.5, useMd5 = false)
-    },
-    "fast__q_link_tables" -> sorted("id_l", "id_r") { (s, d) =>
-      val docs = Tables.loadWide(s, d, "documents")
-      operators.Dedup.linkTables(docs, "text", "doc_id",
-          linkRightTable(docs), "text", "doc_id", maxDist = 10,
-          useMd5 = false)
-    }
-    // NOT here: a fast__ row for the tree-graph lane's leaf-1024
-    // operating point (BASELINE.md r13 graphsweep). The md5/xxhash64
-    // fast lanes measure a SCALE-INDEPENDENT substitution, so the sf0.1
-    // bench row is representative; leaf size is scale-DEPENDENT — at
-    // sf0.1's 2k vectors a 1024-leaf tree barely splits and the row
-    // would measure near-brute-force, not the operating point. The
-    // meaningful measurement lives in the sf1 sweep table.
-  )
-
+object Bench {
   /** Per-query seconds out of a prior record's flat `"queries":{...}` map
     * (our own machine-written format — no nesting inside the braces).
     * Failed-query -1 sentinels are dropped so they never join a subtotal. */
@@ -114,10 +82,9 @@ object Bench extends QueryShared {
     // what the driver records
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val benchable = SparkEntry.queries ++ fastLanes
     val selected = only match {
-      case Some(names) => benchable.filter(kv => names(kv._1))
-      case None => benchable
+      case Some(names) => SparkEntry.queries.filter(kv => names(kv._1))
+      case None => SparkEntry.queries
     }
     val results = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
       val times = (1 to reps).map { _ =>

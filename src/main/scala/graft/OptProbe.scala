@@ -49,7 +49,6 @@ object OptProbe {
 
     for (q <- names) {
       val fn = SparkEntry.queries.get(q)
-        .orElse(Bench.fastLanes.get(q))
         .getOrElse(sys.error(s"unknown query: $q"))
       def run(): Double = {
         val t0 = System.nanoTime()

@@ -25,7 +25,6 @@ object PlanDump {
     val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     Files.createDirectories(Paths.get(outDir))
     val fns = names.map(q => q -> SparkEntry.queries.get(q)
-      .orElse(Bench.fastLanes.get(q))
       .getOrElse(sys.error(s"unknown query: $q")))
     def dump(df: DataFrame, file: String): Unit = {
       Files.writeString(Paths.get(s"$outDir/$file"),

@@ -445,7 +445,7 @@ private[graft] object QueriesA extends QueryShared {
     "q_kmv_distinct" -> ((s, d) => {
       val toks = tw(s, d, "documents")
         .select(col("source"), explode(TextFunctions.tokens(col("text"))).as("tok"))
-      Sketches.kmvDistinct(toks, "tok", "source", k = 64, useMd5 = true)
+      Sketches.kmvDistinct(toks, "tok", "source", k = 64)
         .orderBy("source")
     }),
 
@@ -511,7 +511,7 @@ private[graft] object QueriesA extends QueryShared {
     "q_kmv_overlap" -> ((s, d) => {
       val toks = tw(s, d, "documents")
         .select(col("source"), explode(TextFunctions.tokens(col("text"))).as("tok"))
-      Sketches.kmvPairOverlap(toks, "tok", "source", k = 64, useMd5 = true)
+      Sketches.kmvPairOverlap(toks, "tok", "source", k = 64)
         .orderBy("ga", "gb")
     }),
 
@@ -1024,11 +1024,10 @@ private[graft] object QueriesA extends QueryShared {
     // ---- dedup: duplicate-span LOCALIZATION (Lee et al. 2022) ----
     // q_repeated_spans reports the shared window STRINGS; this merges the
     // cross-doc windows into maximal per-doc token ranges — the cut list a
-    // span-level dedup pass actually applies. String lane anchors the
-    // oracle; the xxhash64 shuffle lane is spec-pinned identical.
+    // span-level dedup pass actually applies.
     "q_span_dedup" -> ((s, d) => {
       Dedup.duplicateSpans(tw(s, d, "documents"), "text", "doc_id",
-        window = 8, minDocs = 2, hashLane = false)
+        window = 8, minDocs = 2)
         .orderBy("doc", "span_start")
     }),
 

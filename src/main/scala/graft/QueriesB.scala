@@ -1303,7 +1303,7 @@ private[graft] object QueriesB extends QueryShared {
     // size; recall trade priced by comparing against the exact twin) ----
     "q_jaro_scaled" -> sorted("id_a", "id_b") { (s, d) =>
       jaroPairs(Linkage.capBlocks(tw(s, d, "part"), Seq("p_brand"),
-        "p_partkey", cap = 400, useMd5 = true))
+        "p_partkey", cap = 400))
     },
 
     // ---- eval: Poisson bootstrap replicates (B resamples, ONE scan) ----

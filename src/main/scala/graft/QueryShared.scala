@@ -34,14 +34,18 @@ private[graft] trait QueryShared {
   private[graft] val jvmTag: String = java.util.UUID.randomUUID().toString.take(8)
 
   /** The directory a stored-index query of `kind` keeps for data dir `d`:
-    * `target/graft-<kind>/<d's name chars>-<d's hash>-<jvmTag><suffix>`.
+    * `target/graft-<kind>/<jvmTag>/<d's name chars>-<d's hash><suffix>`.
     * Leading `_` and `.` are dropped from the leaf, which Spark would
     * otherwise treat as a hidden path (`All paths were ignored`) — as it
-    * did for every absolute `d`, whose `/` became a leading `_`. */
+    * did for every absolute `d`, whose `/` became a leading `_`. The
+    * `<jvmTag>` directory holds everything this JVM stores for `kind`,
+    * including the `.centroids`/`.codebook`/`.stats` files the operators
+    * write beside an index, so it is deleted when the JVM exits. */
   private[graft] def storeDir(kind: String, d: String, suffix: String = ""): String = {
     val stem = d.replaceAll("[^A-Za-z0-9.]", "_").dropWhile(c => c == '_' || c == '.')
-    s"target/graft-$kind/${if (stem.isEmpty) "data" else stem}" +
-      f"-${d.hashCode}%08x-$jvmTag$suffix"
+    val jvmDir = s"target/graft-$kind/$jvmTag"
+    org.apache.spark.sql.graft.ColumnBridge.deleteOnExit(new java.io.File(jvmDir))
+    s"$jvmDir/${if (stem.isEmpty) "data" else stem}" + f"-${d.hashCode}%08x$suffix"
   }
 
   /** Money arithmetic in integer cents — exact (data is 2dp, magnitudes
@@ -243,10 +247,8 @@ private[graft] trait QueryShared {
   private[graft] def erSidesCapped(s: SparkSession, d: String)
       : (DataFrame, DataFrame) = {
     val (a, b) = erSides(s, d)
-    (Linkage.capBlocks(a, Seq("nat", "postcode"), "rec_id",
-      cap = FsBlockCap, useMd5 = true),
-      Linkage.capBlocks(b, Seq("nat", "postcode"), "rec_id",
-        cap = FsBlockCap, useMd5 = true))
+    (Linkage.capBlocks(a, Seq("nat", "postcode"), "rec_id", cap = FsBlockCap),
+      Linkage.capBlocks(b, Seq("nat", "postcode"), "rec_id", cap = FsBlockCap))
   }
 
   /** The ER fixture's two sides as CTEs — shared by the fixed-weight

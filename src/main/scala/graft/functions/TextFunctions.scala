@@ -50,8 +50,7 @@ object TextFunctions {
 
   /** Content fingerprint = md5 of the normalized text. md5 is the one hash
     * both Spark and DuckDB implement identically (lowercase hex), which is
-    * why it anchors the oracle-checked dedup path; the scale path can swap
-    * in xxhash64 (see Dedup.scala). */
+    * why it anchors the oracle-checked dedup path. */
   def fingerprint(text: Column): Column = md5(normalized(text))
 
   /** Occurrence count of a literal marker substring, via length delta.

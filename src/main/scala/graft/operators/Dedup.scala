@@ -12,17 +12,21 @@ import org.apache.spark.sql.functions._
   *    cross-partition state;
   *  - the all-pairs step only ever happens *within an LSH band bucket*
   *    (candidate generation), never across the corpus;
-  *  - hash functions are parameterized: md5 (engine-portable, anchors the
-  *    DuckDB oracle) vs xxhash64 (codegen'd, ~5× cheaper — the default at
-  *    scale). Both paths share the same plan shape.
+  *  - one hash family per operator: md5 for MinHash and SimHash, the raw
+  *    window string for duplicate spans — engine-portable, so the DuckDB
+  *    twins reproduce every band key and fingerprint. An xxhash64 family
+  *    measured at most ~6% faster end to end (the band join and verify
+  *    dominate), not enough to keep a second, oracle-less path.
   *
   * Cache lifecycle: operators persist intermediates that feed two plan
   * branches (the shingle relation, the rare-pair intersections). The
   * persists are lazy — they materialize only when the caller executes the
-  * returned plan — and Spark's ContextCleaner reclaims them once the
-  * returned DataFrame is no longer referenced; `nearDupClusters`, which
-  * drives its own actions, checkpoints instead and frees its rounds
-  * eagerly as labels advance.
+  * returned plan — and caller-owned: `Dataset.persist` registers the plan
+  * in the session's CacheManager, which holds the blocks until
+  * `unpersist` or `catalog.clearCache()` (dropping the returned DataFrame
+  * does not release them). A later call that builds the same plan reuses
+  * the cached relation. `nearDupClusters`, which drives its own actions,
+  * checkpoints instead and frees its rounds eagerly as labels advance.
   */
 object Dedup {
 
@@ -152,8 +156,8 @@ object Dedup {
     * each — a single shuffle of the shingle rows, no row explosion, all
     * map-side combinable.
     *
-    * Hash family (md5 / oracle-portable path): hash j is the 32-bit LANE
-    * j%4 (an 8-hex-char substring) of md5("<j/4>:" ++ shingle) — four full
+    * Hash family (md5, which the DuckDB twin reproduces): hash j is the
+    * 32-bit LANE j%4 (an 8-hex-char substring) of md5("<j/4>:" ++ shingle) — four full
     * md5 evaluations per shingle yield 16 lanes, and codegen's subexpression
     * elimination computes each md5 once per row, so the hashing cost is 4
     * digests instead of 16 (measured: the signature stage was the pipeline's
@@ -165,12 +169,11 @@ object Dedup {
     * DedupScaleModeSpec recall test pins the distinction. Min over
     * lowercase-hex strings == min over the 32-bit values (hex order is
     * monotone), which is what makes the DuckDB twin exact.
-    * Scale path: xxhash64 seeded per j, one 64-bit hash each, codegen'd.
     */
-  private def signatures(sh: DataFrame, numHashes: Int, useMd5: Boolean): DataFrame = {
-    // Both lanes aggregate LONGs (optimization r13): min over a STRING
-    // buffer is not hash-aggregable (immutable buffer type), so the md5
-    // lane's 16 min(substring(md5..)) aggs forced a SortAggregate — two
+  private def signatures(sh: DataFrame, numHashes: Int): DataFrame = {
+    // The agg runs over LONGs (optimization r13): min over a STRING
+    // buffer is not hash-aggregable (immutable buffer type), so the
+    // 16 min(substring(md5..)) aggs forced a SortAggregate — two
     // full sorts of the shingle relation (partial + final) per side in
     // every minhash plan. min over the PARSED 32-bit lane value is the
     // same ordering (8 fixed lowercase hex chars compare lexicographically
@@ -181,8 +184,7 @@ object Dedup {
     // bit-for-bit unchanged. Plan: SortAggregate → HashAggregate, 2 sorts
     // removed (plans/r13/q_dedup_minhash_{before,after}.txt).
     def h(j: Int): Column =
-      if (useMd5) min(conv(substring(md5(concat(lit(s"${j / 4}:"), col("shingle"))), 1 + 8 * (j % 4), 8), 16, 10).cast("long"))
-      else min(xxhash64(lit(j), col("shingle")))
+      min(conv(substring(md5(concat(lit(s"${j / 4}:"), col("shingle"))), 1 + 8 * (j % 4), 8), 16, 10).cast("long"))
     val aggs = (0 until numHashes).map(j => h(j).as(s"mh$j"))
     sh.groupBy(col("doc")).agg(aggs.head, aggs.tail: _*)
   }
@@ -192,16 +194,15 @@ object Dedup {
     * S-curve: near-duplicates collide in ≥1 band w.h.p., unrelated docs
     * almost never do. Output: (doc, band, band_key), unpivoted for the
     * bucket self-join. */
-  private def bandsFromSignatures(sig: DataFrame, numHashes: Int, rowsPerBand: Int,
-                                  useMd5: Boolean): DataFrame = {
+  private def bandsFromSignatures(sig: DataFrame, numHashes: Int,
+                                  rowsPerBand: Int): DataFrame = {
     val numBands = numHashes / rowsPerBand
-    // md5 lane: the signature agg carries each lane as its uint32 value
+    // the signature agg carries each lane as its uint32 value
     // (hash-aggregable — see [[signatures]]); reformat to the original
     // 8-char lowercase hex HERE, one projection at document grain, so the
     // band keys are bit-identical to the hex-string form the oracle twin
     // and the stored band indexes use.
-    def lane(idx: Int): Column =
-      if (useMd5) lpad(lower(hex(col(s"mh$idx"))), 8, "0") else col(s"mh$idx")
+    def lane(idx: Int): Column = lpad(lower(hex(col(s"mh$idx"))), 8, "0")
     val bandStructs = (0 until numBands).map { b =>
       val key = md5(concat_ws("|", (0 until rowsPerBand).map(r => lane(b * rowsPerBand + r)): _*))
       struct(lit(b).as("band"), key.as("band_key"))
@@ -214,10 +215,10 @@ object Dedup {
     * documents join existing band buckets without rescanning the corpus). */
   def minhashBands(docs: DataFrame, textCol: String, idCol: String,
                    numHashes: Int = 16, rowsPerBand: Int = 4,
-                   shingleSize: Int = 3, useMd5: Boolean = true): DataFrame =
+                   shingleSize: Int = 3): DataFrame =
     bandsFromSignatures(
-      signatures(shingleRows(docs, textCol, idCol, shingleSize), numHashes, useMd5),
-      numHashes, rowsPerBand, useMd5)
+      signatures(shingleRows(docs, textCol, idCol, shingleSize), numHashes),
+      numHashes, rowsPerBand)
 
   /** Raw banded candidate pairs (id_a < id_b, distinct) WITHOUT the Jaccard
     * verify — what the LSH stage alone proposes. Exists so candidate
@@ -225,13 +226,12 @@ object Dedup {
     * in a different verifier. */
   def minhashCandidatePairs(docs: DataFrame, textCol: String, idCol: String,
                             numHashes: Int = 16, rowsPerBand: Int = 4,
-                            shingleSize: Int = 3,
-                            useMd5: Boolean = true): DataFrame =
+                            shingleSize: Int = 3): DataFrame =
     // persist: both sides of the bucket self-join read the band relation
     // (see the minhashNearDups note — broadcast build cannot reuse the
     // probe side's plan, so each side would re-run the signature kernel)
     bandCandidates(minhashBands(docs, textCol, idCol, numHashes, rowsPerBand,
-      shingleSize, useMd5)
+      shingleSize)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
   /** MEASURE-BEFORE-SHIP for the LSH banding plan — the dedup counterpart
@@ -250,7 +250,7 @@ object Dedup {
   def lshCandidateEval(docs: DataFrame, textCol: String, idCol: String,
                        numHashes: Int = 16, rowsPerBand: Int = 4,
                        shingleSize: Int = 3, threshold: Double = 0.5,
-                       maxDf: Int = 100, useMd5: Boolean = true): DataFrame = {
+                       maxDf: Int = 100): DataFrame = {
     // Eager localCheckpoints (NOT the usual lazy persist): the inner
     // lanes carry their own persists whose blocks would otherwise stay
     // pinned for the life of this 6-way reuse plan — materializing here
@@ -265,7 +265,7 @@ object Dedup {
       // ckpt: one-shot — candidate-bounded diagnostic relation
       .localCheckpoint(eager = true)
     val pred = minhashCandidatePairs(docs, textCol, idCol, numHashes,
-        rowsPerBand, shingleSize, useMd5)
+        rowsPerBand, shingleSize)
       // ckpt: one-shot — candidate-bounded diagnostic relation
       .localCheckpoint(eager = true)
     val hit = truth.join(pred, Seq("id_a", "id_b"), "left_semi")
@@ -286,8 +286,7 @@ object Dedup {
     * corpus. */
   def minhashNearDups(docs: DataFrame, textCol: String, idCol: String,
                       numHashes: Int = 16, rowsPerBand: Int = 4,
-                      shingleSize: Int = 3, threshold: Double = 0.5,
-                      useMd5: Boolean = true): DataFrame = {
+                      shingleSize: Int = 3, threshold: Double = 0.5): DataFrame = {
     // The (doc, shingle) relation feeds BOTH candidate generation and the
     // Jaccard verify — materialize it once instead of re-deriving from text.
     // (At cluster scale this would be a checkpointed intermediate table.)
@@ -298,9 +297,9 @@ object Dedup {
     // cannot reuse the probe side's plan — without the persist EACH side
     // re-executes the corpus-grain shingle+signature kernel (OptProbe:
     // twin md5-heavy stages in every minhash profile). 4 small rows per
-    // doc: cheap to hold, lazy, reclaimed on dereference.
-    val bands = bandsFromSignatures(signatures(sh, numHashes, useMd5),
-        numHashes, rowsPerBand, useMd5)
+    // doc: cheap to hold, lazy, cached until unpersist/clearCache.
+    val bands = bandsFromSignatures(signatures(sh, numHashes),
+        numHashes, rowsPerBand)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     verifyJaccardOnShingles(sh, bandCandidates(bands), threshold)
   }
@@ -318,10 +317,10 @@ object Dedup {
     * what an index exists to stop. */
   def buildDedupIndex(docs: DataFrame, textCol: String, idCol: String,
                       dir: String, numHashes: Int = 16, rowsPerBand: Int = 4,
-                      shingleSize: Int = 3, useMd5: Boolean = true): Unit = {
+                      shingleSize: Int = 3): Unit = {
     val sh = shingleRows(docs, textCol, idCol, shingleSize)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    bandsFromSignatures(signatures(sh, numHashes, useMd5), numHashes, rowsPerBand, useMd5)
+    bandsFromSignatures(signatures(sh, numHashes), numHashes, rowsPerBand)
       .write.mode("overwrite").parquet(dir + "/bands")
     sh.write.mode("overwrite").parquet(dir + "/shingles")
     sh.unpersist(); ()
@@ -381,13 +380,13 @@ object Dedup {
     * only candidate rows carry text through the shuffle. */
   def editDistancePairs(docs: DataFrame, textCol: String, idCol: String,
                         maxDist: Int, numHashes: Int = 16, rowsPerBand: Int = 4,
-                        shingleSize: Int = 3, useMd5: Boolean = true): DataFrame = {
+                        shingleSize: Int = 3): DataFrame = {
     // The band relation feeds BOTH sides of the candidate self-join —
     // without a persist each branch recomputes the full shingle+signature
     // kernel (measured 1.5× wall at sf1). 4 small rows per doc: cheap to
-    // hold, lazy, reclaimed when the returned plan is dereferenced.
+    // hold, lazy, cached until unpersist/clearCache.
     val bands = minhashBands(docs, textCol, idCol, numHashes, rowsPerBand,
-      shingleSize, useMd5)
+      shingleSize)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val candidates = spreadPairs(bandCandidates(bands))
     val texts = docs.select(col(idCol), col(textCol))
@@ -418,11 +417,11 @@ object Dedup {
   def linkTables(left: DataFrame, leftText: String, leftId: String,
                  right: DataFrame, rightText: String, rightId: String,
                  maxDist: Int, numHashes: Int = 16, rowsPerBand: Int = 4,
-                 shingleSize: Int = 3, useMd5: Boolean = true): DataFrame = {
+                 shingleSize: Int = 3): DataFrame = {
     val lb = minhashBands(left, leftText, leftId, numHashes, rowsPerBand,
-      shingleSize, useMd5)
+      shingleSize)
     val rb = minhashBands(right, rightText, rightId, numHashes, rowsPerBand,
-      shingleSize, useMd5)
+      shingleSize)
     verifyLinkCandidates(lb, rb,
       left.select(col(leftId).as("id_l"), col(leftText).as("__tl")),
       right.select(col(rightId).as("id_r"), col(rightText).as("__tr")),
@@ -461,7 +460,7 @@ object Dedup {
     * kernel + a candidates-sized verify. */
   def buildLinkIndex(left: DataFrame, leftText: String, leftId: String,
                      dir: String, numHashes: Int = 16, rowsPerBand: Int = 4,
-                     shingleSize: Int = 3, useMd5: Boolean = true): Unit = {
+                     shingleSize: Int = 3): Unit = {
     // texts FIRST — the same crash-ordering appendLinkIndex argues: a
     // caller REBUILDING over an existing index that crashes between the
     // two writes leaves fresh texts + stale bands, which only costs
@@ -473,7 +472,7 @@ object Dedup {
     left.select(col(leftId).as("id_l"), col(leftText).as("__tl"))
       .write.mode("overwrite").parquet(dir + "/texts")
     minhashBands(left, leftText, leftId, numHashes, rowsPerBand,
-        shingleSize, useMd5)
+        shingleSize)
       .write.mode("overwrite").parquet(dir + "/bands")
     ()
   }
@@ -486,7 +485,7 @@ object Dedup {
     * on a production cluster write through a transactional table format. */
   def appendLinkIndex(delta: DataFrame, textCol: String, idCol: String,
                       dir: String, numHashes: Int = 16, rowsPerBand: Int = 4,
-                      shingleSize: Int = 3, useMd5: Boolean = true): Unit = {
+                      shingleSize: Int = 3): Unit = {
     // texts append FIRST: the two appends are not atomic together, and
     // the failure modes differ — orphaned texts (crash after the first
     // append) are invisible (no bands -> no candidates; the retry makes
@@ -497,7 +496,7 @@ object Dedup {
     delta.select(col(idCol).as("id_l"), col(textCol).as("__tl"))
       .write.mode("append").parquet(dir + "/texts")
     minhashBands(delta, textCol, idCol, numHashes, rowsPerBand,
-        shingleSize, useMd5)
+        shingleSize)
       .write.mode("append").parquet(dir + "/bands")
     ()
   }
@@ -514,7 +513,7 @@ object Dedup {
   def linkAgainstIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
                        right: DataFrame, rightText: String, rightId: String,
                        maxDist: Int, numHashes: Int = 16, rowsPerBand: Int = 4,
-                       shingleSize: Int = 3, useMd5: Boolean = true): DataFrame = {
+                       shingleSize: Int = 3): DataFrame = {
     // both halves must be committed writes: a half-written index (crash
     // mid-build/mid-rebuild) must fail loudly here, not verify against
     // whatever files happen to exist
@@ -532,7 +531,7 @@ object Dedup {
     // one id keep both rows — the upstream-dedup contract surfaces them)
     val lt = spark.read.parquet(dir + "/texts").dropDuplicates("id_l", "__tl")
     val rb = minhashBands(right, rightText, rightId, numHashes, rowsPerBand,
-      shingleSize, useMd5)
+      shingleSize)
     verifyLinkCandidates(lb, rb, lt,
       right.select(col(rightId).as("id_r"), col(rightText).as("__tr")),
       maxDist)
@@ -653,13 +652,6 @@ object Dedup {
   private def simhashNearDupsPacked(docs: DataFrame, textCol: String, idCol: String,
                                     maxDist: Int): DataFrame =
     pairsFromPackedFingerprints(simhashPacked(docs, textCol, idCol), maxDist)
-
-  /** SCALE-mode pairing: xxhash64 fingerprints + the same chunk banding.
-    * The fastest end-to-end SimHash path; not oracle-comparable (hash
-    * family differs), recall pinned by DedupScaleModeSpec. */
-  def simhashNearDupsFast(docs: DataFrame, textCol: String, idCol: String,
-                          maxDist: Int = 3): DataFrame =
-    pairsFromPackedFingerprints(simhashPackedFast(docs, textCol, idCol), maxDist)
 
   /** Public face of the packed-fingerprint pair kernel for OTHER hash
     * families (the media lane's perceptual hashes ride it unchanged):
@@ -961,29 +953,10 @@ object Dedup {
   def simhashPacked(docs: DataFrame, textCol: String, idCol: String): DataFrame =
     packSums(simhashSums(docs, textCol, idCol))
 
-  /** SimHash packed fingerprints in SCALE mode: token bits come from ONE
-    * xxhash64 per token — `(h >> k) & 1` for all 64 positions — instead of
-    * md5 + 16 hex-digit extractions. Same plan shape and output type as
-    * `simhashPacked`; different (equally valid) hash family, so
-    * fingerprints are not comparable across modes — pick one per corpus.
-    * DuckDB has no xxhash64, hence the md5 family anchors the oracle and
-    * this anchors throughput (the recall spec pins that both families
-    * catch planted near-dups). */
-  def simhashPackedFast(docs: DataFrame, textCol: String, idCol: String): DataFrame = {
-    val toks = tokenCounts(docs, textCol, idCol)
-    val src = toks.select(col("doc"), col("cnt"), xxhash64(col("tok")).as("h"))
-    val sums = (0 until 64).map { k =>
-      val bit = shiftrightunsigned(col("h"), 63 - k).bitwiseAND(lit(1L))
-      sum(when(bit === 1, col("cnt")).otherwise(-col("cnt"))).as(s"s$k")
-    }
-    packSums(src.groupBy("doc").agg(sums.head, sums.tail: _*))
-  }
-
   /** (doc, s0..s63) sign sums → one signed 64-bit BIGINT. Distinct powers
     * of two can't carry, so the OR is a sum; bit 0 maps to Long.MinValue
     * (two's complement MSB) and the 63 positive bits sum to at most
-    * Long.MaxValue — no overflow even under ANSI mode. Shared by both hash
-    * families so the encoding can never diverge between them. */
+    * Long.MaxValue — no overflow even under ANSI mode. */
   private def packSums(agged: DataFrame): DataFrame = {
     val msb = when(col("s0") > 0, lit(Long.MinValue)).otherwise(lit(0L))
     val packed = (1 until 64).map { k =>
@@ -991,15 +964,6 @@ object Dedup {
     }.foldLeft(msb)(_ + _)
     agged.select(col("doc"), packed.as("simhash"))
   }
-
-  /** Weighted distinct tokens per document — the shared prelude of every
-    * SimHash family (token multiplicity is a weight: hash each distinct
-    * token once, Σ contrib over duplicate rows == Σ contrib·count). */
-  private def tokenCounts(docs: DataFrame, textCol: String, idCol: String): DataFrame =
-    docs.select(col(idCol).as("doc"),
-        explode(graft.expressions.Exprs.wordShingles(col(textCol), 1)).as("tok"))
-      .filter(col("tok") =!= "")
-      .groupBy("doc", "tok").agg(count(lit(1)).as("cnt"))
 
   /** Shared SimHash kernel: (doc, s0..s63) signed bit-position sums.
     * Two structural choices keep this one codegen'd pass:
@@ -1014,7 +978,10 @@ object Dedup {
     * the interpreted filter(split(...)) chain; the empty-text edge case
     * ([""] vs []) is closed by the non-empty filter. */
   private def simhashSums(docs: DataFrame, textCol: String, idCol: String): DataFrame = {
-    val toks = tokenCounts(docs, textCol, idCol)
+    val toks = docs.select(col(idCol).as("doc"),
+        explode(graft.expressions.Exprs.wordShingles(col(textCol), 1)).as("tok"))
+      .filter(col("tok") =!= "")
+      .groupBy("doc", "tok").agg(count(lit(1)).as("cnt"))
     val h = md5(col("tok"))
     // hex digit value via ascii arithmetic — '0'-'9' are 48-57, 'a'-'f'
     // are 97-102 (md5 is lowercase); avoids conv()'s per-digit string
@@ -1120,23 +1087,17 @@ object Dedup {
     * (adjacent/overlapping windows fuse when starts differ by ≤ `window`).
     * The only window function is partitioned by doc — bounded by document
     * length, never corpus-wide. At 100 TB: one shuffle on the window key,
-    * one on doc for the merge; nothing quadratic, no global sort.
-    *
-    * `hashLane=true` shuffles xxhash64(win) — 8 bytes instead of the
-    * window text — the production default; `false` keys on the raw window
-    * string (engine-portable, anchors the DuckDB twin). Identical output
-    * barring a 64-bit hash collision (spec-pinned equal). Returns
-    * (doc, span_start, span_end, n_windows, span_len), token positions
-    * 1-based inclusive. */
+    * one on doc for the merge; nothing quadratic, no global sort. Windows
+    * are keyed on the raw window string, which the DuckDB twin reproduces.
+    * Returns (doc, span_start, span_end, n_windows, span_len), token
+    * positions 1-based inclusive. */
   def duplicateSpans(docs: DataFrame, textCol: String, idCol: String,
-                     window: Int, minDocs: Int = 2,
-                     hashLane: Boolean = true): DataFrame = {
+                     window: Int, minDocs: Int = 2): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(window >= 2, "window must be >= 2 tokens")
     require(minDocs >= 2, "a span shared by < 2 docs is not a cross-doc dup")
     val wins = tokenWindows(docs, textCol, idCol, window)
-      .select(col("doc"), col("start"),
-        (if (hashLane) xxhash64(col("win")) else col("win")).as("wkey"))
+      .select(col("doc"), col("start"), col("win").as("wkey"))
     val dupKeys = wins.groupBy("wkey")
       .agg(countDistinct(col("doc")).as("nd"))
       .filter(col("nd") >= minDocs)

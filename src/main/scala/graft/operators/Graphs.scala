@@ -77,8 +77,9 @@ object Graphs {
     // caches are registered by canonicalized plan, so a repeated call
     // over the same edges relation (bench reps, a refit pass) reuses
     // them — eager unpersist doubled the wall cost of exactly those
-    // reuse patterns while saving nothing (ContextCleaner reclaims the
-    // blocks once the plans are dereferenced). The r7 lazy-persist
+    // reuse patterns. The cost: the session's CacheManager holds the
+    // blocks until the caller unpersists them or clears the cache (it is
+    // not reclaimed when the plans are dereferenced). The r7 lazy-persist
     // convention stands.
     r.select(col("node"), (col("r") / 1e6).as("rank"))
   }
@@ -278,7 +279,8 @@ object Graphs {
         greatest(col("x"), col("y")).as("v"))
       .distinct()
       // the RETURNED plan still reads this cache (wedge side ×2 + the
-      // anti join) — caller-owned lifecycle; ContextCleaner reclaims it
+      // anti join) — caller-owned lifecycle; the session's CacheManager
+      // holds it until unpersist/clearCache
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val adj = raw.select(col("u").as("z"), col("v").as("n"))
       .union(raw.select(col("v").as("z"), col("u").as("n")))

@@ -29,19 +29,15 @@ object Linkage {
     * almost no discrimination, so bounding it bounds the whole join's
     * candidate volume at the cost of recall INSIDE pathological blocks
     * only. Run [[linkEval]] with and without the cap to price that
-    * trade on your corpus. */
+    * trade on your corpus. The rank hash is the md5 lane
+    * ([[Sketches.md5Hash32]]) of the id string, so a DuckDB twin
+    * reproduces the kept set. */
   def capBlocks(df: DataFrame, blockCols: Seq[String], idCol: String,
-                cap: Int, useMd5: Boolean = false): DataFrame = {
+                cap: Int): DataFrame = {
     require(cap >= 1, s"cap must be >= 1: $cap")
-    // dual hash lane (the Dedup convention): xxhash64 at scale, the
-    // md5-lane when a DuckDB twin must reproduce the ranking
-    val h =
-      if (useMd5)
-        graft.operators.Sketches.md5Hash32(col(idCol).cast("string"))
-      else xxhash64(col(idCol))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(blockCols.map(col): _*)
-      .orderBy(h, col(idCol))
+      .orderBy(Sketches.md5Hash32(col(idCol).cast("string")), col(idCol))
     df.withColumn("__rk", row_number().over(w))
       .filter(col("__rk") <= cap)
       .drop("__rk")

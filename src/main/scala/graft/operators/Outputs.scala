@@ -64,8 +64,7 @@ object Outputs {
     * (epoch resume at sample k); `writeTrainingShards` skips the window
     * when `withPositions = false` — file order IS the scramble order.
     * The knuth family anchors the oracle (integer arithmetic both engines
-    * share); at 100 TB swap the scramble for xxhash64 — same plan, the
-    * same oracle-vs-scale split the MinHash lanes document. */
+    * share). */
   def shardAssignments(df: DataFrame, idCol: String, numShards: Int): DataFrame = {
     require(numShards >= 1, s"numShards must be >= 1: $numShards")
     val id = F.col(idCol)

@@ -75,7 +75,8 @@ object Preferences {
     val rev = wins.select(col("loser").as("i"), col("winner").as("j"),
       col("n_wins").as("w"))
     // sym feeds every MM round and items every raw step — lazy persists
-    // (item²-bounded), reclaimed when the returned plan is dereferenced
+    // (item²-bounded), held by the session's CacheManager until
+    // unpersist/clearCache
     val sym = fwd.unionByName(rev).groupBy("i", "j").agg(sum("w").as("t"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val items = sym.select(col("i").as("item"))
@@ -114,13 +115,14 @@ object Preferences {
     }
     // no unpersist of sym/items — same rationale as the Graphs loop
     // kernels (r9): canonicalized-plan cache reuse across repeated calls
-    // is worth more than early block release; ContextCleaner reclaims.
+    // is worth more than early block release; the blocks stay cached
+    // until the caller unpersists them or clears the cache.
     s.select(col("item"), col("wins"), col("s").as("strength_micro"))
   }
 
   /** End-to-end: comparisons → win matrix (persisted — it feeds every MM
-    * iteration; lazy, reclaimed by the ContextCleaner when the returned
-    * plan is dereferenced) → Bradley–Terry strengths. */
+    * iteration; lazy, held by the session's CacheManager until
+    * unpersist/clearCache) → Bradley–Terry strengths. */
   def fitBradleyTerry(df: DataFrame, pairIdCol: Column, itemCol: String,
                       scoreCol: String, orderCol: String,
                       iters: Int = 3): DataFrame = {

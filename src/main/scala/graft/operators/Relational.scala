@@ -147,9 +147,9 @@ object RelationalOps {
     val centsCol = round(col(valueCol) * 100, 0).cast("long")
     // The bucket-grain aggregate feeds TWO branches (the span→grid side and
     // the join side); without a persist each branch re-scans the event
-    // corpus. Lazy persist — materializes on first execution, reclaimed by
-    // the ContextCleaner once the plan is dereferenced (Dedup's documented
-    // cache-lifecycle convention).
+    // corpus. Lazy persist — materializes on first execution and stays in
+    // the session's CacheManager until the caller unpersists or clears the
+    // cache (Dedup's documented cache-lifecycle convention).
     val bucketed = df
       .groupBy(keys :+ date_trunc(unit, col(tsCol)).as("bucket"): _*)
       .agg(count(lit(1)).as("n_events"), sum(centsCol).as("__cents"))

@@ -946,8 +946,8 @@ object Similarity {
                    k: Int): DataFrame = {
     val cells = ivfAssign(emb, vecCol, idCol, k)
       .groupBy("centroid_id").agg(count(lit(1)).as("n_vectors"))
-      // caller-owned cache (returned plan reads it from >1 branch);
-      // ContextCleaner reclaims it when the plan is dereferenced
+      // caller-owned cache (returned plan reads it from >1 branch); the
+      // session's CacheManager holds it until unpersist/clearCache
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val total = cells.select(sum("n_vectors").as("__n_total"))
     cells.crossJoin(broadcast(total))
@@ -2076,8 +2076,8 @@ object Similarity {
       // pair outright (the semanticDecontaminate/knnGraph convention)
       .filter(!isnan(col("cos_sim")))
       .withColumn("__cq", fastRound(col("cos_sim") * 10000, 0).cast("long"))
-      // caller-owned cache (returned plan reads it from >1 branch);
-      // ContextCleaner reclaims it when the plan is dereferenced
+      // caller-owned cache (returned plan reads it from >1 branch); the
+      // session's CacheManager holds it until unpersist/clearCache
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val topk = udaf(new graft.functions.TopKHits(kNN),
       graft.functions.TopKHits.hitEncoder)

@@ -11,13 +11,10 @@ import org.apache.spark.sql.functions._
   * distinct-count fold of samza-hello-samza's TumblingPageViewCounter,
   * generalized to the bounded-sketch form a batch profiler needs.)
   *
-  * Two hash lanes, same convention as the minhash family
-  * ([[Dedup]]): md5-derived 32-bit hashes anchor the DuckDB oracle
-  * (both engines compute the identical digest, so the sketch — and hence
-  * the ESTIMATE, a pure function of the sketch — hash-matches); xxhash64
-  * is the scale default (one codegen'd 64-bit hash vs a digest + hex
-  * parse, and a 2^64 space pushes the collision floor far below any real
-  * corpus). */
+  * One hash family, as in [[Dedup]]: md5-derived 32-bit hashes, which
+  * the DuckDB oracle reproduces (both engines compute the identical
+  * digest, so the sketch — and hence the ESTIMATE, a pure function of the
+  * sketch — hash-matches). */
 object Sketches {
 
   /** Portable 32-bit hash: the first 8 hex digits of md5, as a long in
@@ -33,45 +30,29 @@ object Sketches {
       d.cast("long") * (1L << (4 * (7 - i)))
     }.reduce(_ + _)
 
-  /** xxhash64 shifted into unsigned order: flipping the sign bit maps
-    * signed [-2^63, 2^63) onto unsigned [0, 2^64) order-preservingly, so
-    * "k smallest" means k smallest in the uniform hash space. */
-  private def xx64Unsigned(c: Column): Column =
-    xxhash64(c).bitwiseXOR(Long.MinValue)
-
   /** Distinct-count estimate per group via a KMV sketch of the hashed
     * value column: one scan, bounded per-group state (k longs), estimate
     * `(k-1)·SPACE / h(k)` once the sketch is full, exact `|sketch|` while
     * it isn't (fewer than k distinct values seen ⇔ the sketch IS the
-    * distinct set). Integer arithmetic end to end in md5 mode —
+    * distinct set). Integer arithmetic end to end —
     * `(k-1)·2^32` stays far under 2^63 for any sane k, and `div` is exact
     * on both engines (no float rounding to disagree about).
     *
     * Standard error is ~1/√(k-2) (k=64 ≈ 13%, k=256 ≈ 6%) — the caller
-    * picks k per column; the sketch is DETERMINISTIC for a given hash
-    * lane, so reruns and engines agree on the exact estimate, error and
-    * all ([[graft.functions.KmvSketch]] for why HLL can't make that
-    * promise).
+    * picks k per column; the sketch is DETERMINISTIC, so reruns and
+    * engines agree on the exact estimate, error and all
+    * ([[graft.functions.KmvSketch]] for why HLL can't make that promise).
     *
     * Scale shape: hash is a scan-side codegen projection; the only
     * shuffle is the group-by whose partials are ≤ k longs each; output is
-    * groups-sized. In xxhash64 mode the 2^64 space exceeds a long, so the
-    * estimate divides in DOUBLE — fine for a profiling estimate, but the
-    * md5 lane is the one the oracle checks. */
-  def kmvDistinct(df: DataFrame, valueCol: String, groupCol: String, k: Int,
-                  useMd5: Boolean = false): DataFrame = {
+    * groups-sized. */
+  def kmvDistinct(df: DataFrame, valueCol: String, groupCol: String,
+                  k: Int): DataFrame = {
     require(k > 1, s"k must be >1 for the (k-1)/U(k) estimator: $k")
-    val h = if (useMd5) md5Hash32(col(valueCol)) else xx64Unsigned(col(valueCol))
     val sketch = udaf(new graft.functions.KmvSketch(k),
       org.apache.spark.sql.Encoders.scalaLong)
-    val est =
-      if (useMd5)
-        s"CAST(${(k - 1).toLong * 4294967296L} AS BIGINT) div element_at(kmv, $k)"
-      else
-        // 2^64 / h(k) in double; h(k) back in unsigned magnitude
-        s"CAST(round(${(k - 1).toDouble} * 1.8446744073709552E19 / " +
-          s"(CAST(element_at(kmv, $k) AS DOUBLE) + 9.223372036854776E18), 0) AS BIGINT)"
-    df.select(col(groupCol), h.as("h"))
+    val est = s"CAST(${(k - 1).toLong * 4294967296L} AS BIGINT) div element_at(kmv, $k)"
+    df.select(col(groupCol), md5Hash32(col(valueCol)).as("h"))
       .groupBy(groupCol)
       .agg(sketch(col("h")).as("kmv"))
       .selectExpr(groupCol,
@@ -105,10 +86,8 @@ object Sketches {
     * membership flags) runs on groups²×k rows — for thousands of groups
     * that is millions of tiny rows, nothing corpus-scaled. */
   def kmvPairOverlap(df: DataFrame, valueCol: String, groupCol: String,
-                     k: Int, useMd5: Boolean = false): DataFrame = {
+                     k: Int): DataFrame = {
     require(k > 1, s"k must be >1: $k")
-    require(useMd5, "pair overlap is defined on the md5 (32-bit) lane — " +
-      "the xxhash64 estimate divides in double and is not pair-exact")
     val h = md5Hash32(col(valueCol))
     val sketch = udaf(new graft.functions.KmvSketch(k),
       org.apache.spark.sql.Encoders.scalaLong)
@@ -116,8 +95,8 @@ object Sketches {
       .groupBy("g").agg(sketch(col("h")).as("kmv"))
       // the returned plan reads this cache from several branches (groups,
       // both union arms), so the operator can't unpersist before
-      // returning — caller-owned lifecycle, ContextCleaner reclaims it
-      // once the result plan is dereferenced (the file-wide convention)
+      // returning — caller-owned lifecycle: the session's CacheManager
+      // holds it until unpersist/clearCache
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val ex = sk.select(col("g"), explode(col("kmv")).as("h"))
     val groups = sk.select(col("g"))
@@ -326,8 +305,8 @@ object Sketches {
     *
     * Scale shape: hash + bucket + rank are one codegen projection; the
     * (group, bucket) agg is map-side combinable with ≤ 64 output rows
-    * per group. md5 lane for the oracle anchor; swap xxhash64 (and
-    * b = 14 / m = 16384 for the ±0.8% production error) at scale. */
+    * per group. The md5 hash anchors the oracle; b = 14 / m = 16384 gives
+    * the ±0.8% production error at scale. */
   def hllBuild(df: DataFrame, valueCol: String, groupCol: String): DataFrame =
     df.select(col(groupCol), md5Hash32(col(valueCol)).as("__h"))
       .filter(col("__h").isNotNull)

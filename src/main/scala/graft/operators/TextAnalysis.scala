@@ -188,9 +188,7 @@ object TextAnalysis {
     * expensive of the two BY DESIGN; run it on the post-curation corpus or
     * a sample). The group-by is one shuffle keyed on the span with partial
     * aggregation; n_docs is a two-phase distinct on (span, doc) pairs. At
-    * 100 TB, group on a 64-bit span hash instead of the string (the
-    * md5/xxhash64 lane trade documented at [[graft.operators.Dedup]]) and
-    * add the df-cut head/tail split if a span goes Zipf-hot. */
+    * 100 TB, add the df-cut head/tail split if a span goes Zipf-hot. */
   def repeatedSpans(docs: DataFrame, textCol: String, idCol: String,
                     spanTokens: Int = 8, minDocs: Int = 2): DataFrame = {
     require(spanTokens > 0 && minDocs > 0, s"need positive span/minDocs")
@@ -856,7 +854,8 @@ object TextAnalysis {
         explode(graft.expressions.Exprs.wordShinglesDistinct(col(textCol), 1)).as("word"))
       .filter(col("word") =!= "")
       // returned plan reads this cache from two branches — caller-owned
-      // lifecycle per the file convention; ContextCleaner reclaims it
+      // lifecycle: the session's CacheManager holds it until
+      // unpersist/clearCache
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val uni = w0.groupBy("word").agg(count(lit(1)).as("c"))
     val kept = if (maxDf == Long.MaxValue) w0
@@ -896,7 +895,8 @@ object TextAnalysis {
     val rows = docs.select(col(idCol).as("doc"),
         explode(graft.expressions.Exprs.wordShinglesDistinct(col(textCol), shingleSize)).as("shingle"))
       // returned plan reads this cache from two branches — caller-owned
-      // lifecycle per the file convention; ContextCleaner reclaims it
+      // lifecycle: the session's CacheManager holds it until
+      // unpersist/clearCache
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val firstSeen = rows.groupBy("shingle").agg(min(col("doc")).as("__first_doc"))
     rows.join(firstSeen, "shingle")
@@ -1369,9 +1369,9 @@ object TextAnalysis {
     * dictionary to broadcast, fixed dimensionality at any corpus size:
     * the feature space that still works when the vocabulary is 10⁹.
     * One explode + one (doc, idx) aggregate — map-side combinable, output
-    * ≤ min(doc_tokens, dim) rows per doc. md5 lane (engine-portable, the
-    * oracle anchor); swap [[graft.operators.Sketches.md5Hash32]] for
-    * xxhash64 at scale exactly like the dedup family. */
+    * ≤ min(doc_tokens, dim) rows per doc. md5 lane
+    * ([[graft.operators.Sketches.md5Hash32]]: engine-portable, the oracle
+    * anchor). */
   def featureHash(docs: DataFrame, textCol: String, idCol: String,
                   dim: Int): DataFrame = {
     require(dim >= 2, s"dim must be >= 2: $dim")
@@ -1466,8 +1466,7 @@ object TextAnalysis {
     *
     * Scale shape: projection + one map-side-combinable aggregate at
     * template cardinality; the text itself never shuffles — only the
-    * masked template (and at 100 TB you'd group its xxhash64 instead and
-    * keep an exemplar via min_by; same plan shape). */
+    * masked template. */
   def templates(docs: DataFrame, textCol: String, idCol: String,
                 minDocs: Long = 2L): DataFrame =
     docs.select(col(idCol).as("doc"),
@@ -1500,7 +1499,8 @@ object TextAnalysis {
         col(labelCol).cast("boolean").as("pos"),
         (Curation.knuthHash(col(idCol), 100L) < trainPct).as("__tr"))
       // returned plan reads this cache from two branches — caller-owned
-      // lifecycle per the file convention; ContextCleaner reclaims it
+      // lifecycle: the session's CacheManager holds it until
+      // unpersist/clearCache
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val trainTok = base.filter(col("__tr"))
       .select(col("pos"),

@@ -141,11 +141,14 @@ object Warehouse {
                               pct: Int): DataFrame = {
     require(pct >= 1 && pct <= 100, s"pct must be in [1,100]: $pct")
     val ca = a.groupBy(col(keyCol).as("k")).agg(count(lit(1)).as("na"))
-      // caller-owned cache (returned plan reads it from >1 branch);
-      // ContextCleaner reclaims it when the plan is dereferenced
+      // caller-owned cache (returned plan reads it from >1 branch); the
+      // session's CacheManager holds it until unpersist/clearCache
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val cb = b.groupBy(col(keyCol).as("k")).agg(count(lit(1)).as("nb"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // b = a (a self-join estimate) gives cb the plan ca already cached;
+    // persisting it again only logs "Asked to cache already cached data"
+    if (cb.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
+      cb.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val sampled = ca.filter(Curation.knuthHash(col("k"), 100L) < pct)
     val est = sampled.join(cb, "k")
       .agg(sum(expr("CAST(na AS DECIMAL(38,0)) * nb")).as("__s"))

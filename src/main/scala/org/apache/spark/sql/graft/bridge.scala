@@ -3,7 +3,8 @@
  * public bytecode but `private[sql]` at the Scala level, so third-party
  * code cannot name it. This one-file shim — the conventional pattern for
  * Spark-external Catalyst extensions — re-exports the two conversions the
- * graft expressions need. Nothing else from Spark internals is touched.
+ * graft expressions need, plus the few other `private[sql]`/`private[spark]`
+ * entry points documented on each method below.
  */
 package org.apache.spark.sql.graft
 
@@ -73,4 +74,11 @@ object ColumnBridge {
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.functionRegistry
       .createOrReplaceTempFunction(name, builder, "built-in")
+
+  /** Delete `dir` recursively when the JVM exits, through Spark's own
+    * shutdown-delete hook (it runs after the SparkContext stops, so no
+    * task still reads the directory). `ShutdownHookManager` is
+    * `private[spark]`, hence the bridge. */
+  def deleteOnExit(dir: java.io.File): Unit =
+    org.apache.spark.util.ShutdownHookManager.registerShutdownDeleteDir(dir)
 }

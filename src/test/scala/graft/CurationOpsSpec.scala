@@ -412,19 +412,6 @@ class CurationOpsSpec extends SparkSpec {
     assert(out == Map((1L, 11L) -> 0L, (2L, 12L) -> 1L), s"got: $out")
   }
 
-  test("linkTables: the xxhash64 scale mode finds the same planted links") {
-    val left = Seq(
-      (1L, "alpha beta gamma delta epsilon zeta"),
-      (2L, "one two three four five six seven")).toDF("id", "name")
-    val right = Seq(
-      (11L, "alpha beta gamma delta epsilon zeta"),
-      (12L, "one two three four five six sevenX")).toDF("rid", "rname")
-    val out = Dedup.linkTables(left, "name", "id", right, "rname", "rid",
-        maxDist = 5, useMd5 = false)
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
-    assert(out == Map((1L, 11L) -> 0L, (2L, 12L) -> 1L), s"got: $out")
-  }
-
   test("linkTables: maxDist cuts a banded candidate that fails the verify") {
     // Same shingle-heavy prefix (band collision likely) but a long tail
     // of edits: candidate generated, verify must kill it at maxDist=2

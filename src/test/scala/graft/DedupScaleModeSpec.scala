@@ -2,73 +2,62 @@ package graft
 
 import graft.operators.Dedup
 
-/** The xxhash64 scale mode (useMd5=false) must find the same verified
-  * near-duplicates as the md5 oracle mode: candidate generation differs
-  * per hash family, but the Jaccard verify pins the final pair set for
-  * well-separated duplicates. */
+/** Recall of the banded near-duplicate lanes on the fixture corpus:
+  * MinHash banding must surface every well-separated duplicate, and
+  * SimHash chunk banding must be lossless at its pigeonhole radius. */
 class DedupScaleModeSpec extends SparkSpec {
   import spark.implicits._
 
-  test("both hash modes recall every high-similarity pair (LSH S-curve guarantee)") {
+  test("MinHash banding recalls every high-similarity pair (LSH S-curve guarantee)") {
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
     // ground truth: exact n-gram Jaccard at 0.8 — far above the banding
-    // scheme's S-curve midpoint, so any reasonable hash family must catch
-    // all of them; borderline pairs (J≈0.5-0.7) may legitimately differ
-    // between families
+    // scheme's S-curve midpoint, so a sound hash family must catch all of
+    // them; borderline pairs (J≈0.5-0.7) depend on the family
     val truth = Dedup.ngramJaccardPairs(docs, "text", "doc_id", 3, 0.8)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(truth.nonEmpty, "fixture corpus has planted near-dups")
     // 32 hashes / 8 bands: per-pair miss probability at J=0.8 is ~1.5%
-    // (vs ~12% at the 16/4 default) — at the fixture's pair count both
-    // fixed hash families recall everything. The outcome is deterministic
-    // per family; this pins it.
-    for (md5Mode <- Seq(true, false)) {
-      val pairs = Dedup.minhashNearDups(docs, "text", "doc_id",
-        numHashes = 32, rowsPerBand = 4, useMd5 = md5Mode)
-        .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-      val missed = truth -- pairs
-      assert(missed.isEmpty, s"useMd5=$md5Mode missed high-sim pairs: $missed")
-      // and everything emitted is verified >= the 0.5 threshold by construction
-      assert(pairs.size >= truth.size)
-    }
+    // (vs ~12% at the 16/4 default) — at the fixture's pair count the md5
+    // family recalls everything. The outcome is deterministic; this pins it.
+    val pairs = Dedup.minhashNearDups(docs, "text", "doc_id",
+      numHashes = 32, rowsPerBand = 4)
+      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
+    val missed = truth -- pairs
+    assert(missed.isEmpty, s"missed high-sim pairs: $missed")
+    // and everything emitted is verified >= the 0.5 threshold by construction
+    assert(pairs.size >= truth.size)
   }
 
-  test("both SimHash families are locality-sensitive, and fast-mode banding is lossless") {
-    import org.apache.spark.sql.DataFrame
+  test("SimHash is locality-sensitive, and its chunk banding is lossless") {
     import org.apache.spark.sql.functions._
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
     // ground truth at J >= 0.95: nearly-identical token multisets. SimHash
     // does NOT guarantee Hamming <= 3 for them (a J=0.95 pair in this
-    // corpus sits at distance 4-6 in the md5 family) — the property a
-    // family must have is that true near-dups land FAR below random
-    // distance (E[random] = 32 bits): assert <= 16 for every truth pair.
+    // corpus sits at distance 4-6) — the property the family must have
+    // is that true near-dups land FAR below random distance
+    // (E[random] = 32 bits): assert <= 16 for every truth pair.
     val truth = Dedup.ngramJaccardPairs(docs, "text", "doc_id", 3, 0.95)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(truth.nonEmpty, "fixture corpus has extreme near-dups")
-    def hammings(fp: DataFrame): Map[(Long, Long), Long] = {
-      val t = truth.toSeq.toDF("id_a", "id_b")
-      t.join(fp.select(col("doc").as("id_a"), col("simhash").as("sa")), Seq("id_a"))
-        .join(fp.select(col("doc").as("id_b"), col("simhash").as("sb")), Seq("id_b"))
-        .select(col("id_a"), col("id_b"),
-          bit_count(col("sa").bitwiseXOR(col("sb"))).cast("long").as("h"))
-        .as[(Long, Long, Long)].collect().map(r => (r._1, r._2) -> r._3).toMap
-    }
-    val md5H = hammings(Dedup.simhashPacked(docs, "text", "doc_id"))
-    val fastH = hammings(Dedup.simhashPackedFast(docs, "text", "doc_id"))
+    val fp = Dedup.simhashPacked(docs, "text", "doc_id")
+    val hammings = truth.toSeq.toDF("id_a", "id_b")
+      .join(fp.select(col("doc").as("id_a"), col("simhash").as("sa")), Seq("id_a"))
+      .join(fp.select(col("doc").as("id_b"), col("simhash").as("sb")), Seq("id_b"))
+      .select(col("id_a"), col("id_b"),
+        bit_count(col("sa").bitwiseXOR(col("sb"))).cast("long").as("h"))
+      .as[(Long, Long, Long)].collect().map(r => (r._1, r._2) -> r._3).toMap
     truth.foreach { p =>
-      assert(md5H(p) <= 16, s"md5 family puts near-dup $p at ${md5H(p)} bits")
-      assert(fastH(p) <= 16, s"xxhash64 family puts near-dup $p at ${fastH(p)} bits")
+      assert(hammings(p) <= 16, s"near-dup $p sits at ${hammings(p)} bits")
     }
-    // banding losslessness for the fast family: the banded pipeline must
-    // return EXACTLY the brute-force Hamming<=3 pair set (pigeonhole: <=3
-    // flipped bits cannot touch all four 16-bit chunks)
-    val fp = Dedup.simhashPackedFast(docs, "text", "doc_id")
+    // banding losslessness: the banded pipeline must return EXACTLY the
+    // brute-force Hamming<=3 pair set (pigeonhole: <=3 flipped bits
+    // cannot touch all four 16-bit chunks)
     val brute = fp.select(col("doc").as("id_a"), col("simhash").as("sa"))
       .crossJoin(fp.select(col("doc").as("id_b"), col("simhash").as("sb")))
       .filter(col("id_a") < col("id_b"))
       .filter(bit_count(col("sa").bitwiseXOR(col("sb"))) <= 3)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    val banded = Dedup.simhashNearDupsFast(docs, "text", "doc_id", maxDist = 3)
+    val banded = Dedup.simhashNearDups(docs, "text", "doc_id", maxDist = 3)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(banded == brute, s"banding lost pairs: ${brute -- banded}, invented: ${banded -- brute}")
   }

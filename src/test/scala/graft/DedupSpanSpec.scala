@@ -22,7 +22,7 @@ class DedupSpanSpec extends SparkSpec {
     val d3 = doc(3L, "z1", "z2", "z3", "z4", "z5", "z6", "z7", "z8")
     val docs = Seq(d1, d2, d3).toDF("doc_id", "text")
     val out = Dedup.duplicateSpans(docs, "text", "doc_id",
-      window = 4, hashLane = false).orderBy("doc").collect()
+      window = 4).orderBy("doc").collect()
     assert(out.map(_.getLong(0)).toSeq == Seq(1L, 2L))
     // doc 1: shared run covers tokens 3..8 (1-based); doc 2: tokens 4..9
     val r1 = out(0); val r2 = out(1)
@@ -36,8 +36,8 @@ class DedupSpanSpec extends SparkSpec {
     val docs = Seq(
       doc(1L, "p", "q", "r", "s", "p", "q", "r", "s"), // self-repeat only
       doc(2L, "u1", "u2", "u3", "u4", "u5")).toDF("doc_id", "text")
-    assert(Dedup.duplicateSpans(docs, "text", "doc_id", window = 4,
-      hashLane = false).count() == 0L)
+    assert(Dedup.duplicateSpans(docs, "text", "doc_id", window = 4)
+      .count() == 0L)
   }
 
   test("duplicateSpans: two disjoint shared runs stay two islands") {
@@ -46,23 +46,11 @@ class DedupSpanSpec extends SparkSpec {
       doc(2L, "a", "b", "c", "n1", "n2", "n3", "n4", "x", "y", "z"))
       .toDF("doc_id", "text")
     val out = Dedup.duplicateSpans(docs, "text", "doc_id",
-      window = 3, hashLane = false).orderBy("doc", "span_start").collect()
+      window = 3).orderBy("doc", "span_start").collect()
     // per doc: tokens 1..3 and 8..10 shared, middle differs
     assert(out.length == 4)
     assert(out.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq ==
       Seq((1L, 1L, 3L), (1L, 8L, 10L), (2L, 1L, 3L), (2L, 8L, 10L)))
-  }
-
-  test("duplicateSpans: xxhash64 shuffle lane == string lane on the fixture corpus") {
-    val docs = Tables.documents(spark, "/root/testdata/sf0.001")
-    val str = Dedup.duplicateSpans(docs, "text", "doc_id", window = 8,
-        hashLane = false)
-      .as[(Long, Long, Long, Long, Long)].collect().toSet
-    val hsh = Dedup.duplicateSpans(docs, "text", "doc_id", window = 8,
-        hashLane = true)
-      .as[(Long, Long, Long, Long, Long)].collect().toSet
-    assert(str.nonEmpty, "fixture corpus has cross-doc duplicate spans")
-    assert(hsh == str)
   }
 
   test("winnowing no-miss guarantee: a shared w+gram-1 token run shares a fingerprint") {

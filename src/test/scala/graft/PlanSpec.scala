@@ -639,7 +639,7 @@ class PlanSpec extends SparkSpec {
   test("contract-sorted queries sort directly over the materialized body") {
     // one body execution per query: the range partitioner samples the
     // checkpointed relation, never the kernel (see ContractSorted)
-    val sorted = (SparkEntry.queries ++ Bench.fastLanes).collect {
+    val sorted = SparkEntry.queries.collect {
       case (q, c: ContractSorted) => q -> c
     }
     assert(sorted.nonEmpty, "no ContractSorted registry entries found")

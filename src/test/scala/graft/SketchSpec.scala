@@ -57,11 +57,11 @@ class SketchSpec extends SparkSpec {
     val values = (1 to 500).map(i => s"tok$i")
     val df = values.toDF("v").withColumn("g", lit("all"))
     // estimator branch: 500 distinct ≫ k=64
-    val est = Sketches.kmvDistinct(df, "v", "g", k = 64, useMd5 = true)
+    val est = Sketches.kmvDistinct(df, "v", "g", k = 64)
       .collect()(0).getLong(1)
     assert(est == kmvExpect(values, 64), s"estimator branch: $est")
     // exact branch: sketch never fills, estimate IS the distinct count
-    val exact = Sketches.kmvDistinct(df, "v", "g", k = 1000, useMd5 = true)
+    val exact = Sketches.kmvDistinct(df, "v", "g", k = 1000)
       .collect()(0).getLong(1)
     assert(exact == 500L, s"exact branch: $exact")
   }
@@ -69,31 +69,29 @@ class SketchSpec extends SparkSpec {
   test("kmvDistinct is invariant to partitioning and to duplicate rows") {
     val values = (1 to 300).map(i => s"w${i % 120}") // 120 distinct, many dups
     val df = values.toDF("v").withColumn("g", lit("all"))
-    val a = Sketches.kmvDistinct(df.repartition(1), "v", "g", 32, useMd5 = true)
+    val a = Sketches.kmvDistinct(df.repartition(1), "v", "g", 32)
       .collect()(0).getLong(1)
-    val b = Sketches.kmvDistinct(df.repartition(13), "v", "g", 32, useMd5 = true)
+    val b = Sketches.kmvDistinct(df.repartition(13), "v", "g", 32)
       .collect()(0).getLong(1)
-    val c = Sketches.kmvDistinct(df.union(df), "v", "g", 32, useMd5 = true)
+    val c = Sketches.kmvDistinct(df.union(df), "v", "g", 32)
       .collect()(0).getLong(1)
     assert(a == b && b == c, s"partitioning/dup variance: $a $b $c")
     assert(a == kmvExpect(values, 32))
   }
 
-  test("kmvDistinct tracks exact distinct counts on real data, both hash lanes") {
+  test("kmvDistinct tracks exact distinct counts on real data") {
     val docs = Tables.load(spark, d, "documents")
     val toks = docs.selectExpr("source", "explode(filter(split(text, ' '), x -> x != '')) AS tok")
     val exact = toks.groupBy("source")
       .agg(countDistinct(col("tok")).as("n")).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
-    for (md5Lane <- Seq(true, false)) {
-      val est = Sketches.kmvDistinct(toks, "tok", "source", k = 64, useMd5 = md5Lane)
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      assert(est.keySet == exact.keySet)
-      est.foreach { case (src, e) =>
-        val x = exact(src).toDouble
-        // k=64 → rse ≈ 1/√62 ≈ 12.7%; 40% is a ≳3σ band
-        assert(math.abs(e - x) / x < 0.40, s"md5=$md5Lane $src: est $e vs exact $x")
-      }
+    val est = Sketches.kmvDistinct(toks, "tok", "source", k = 64)
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(est.keySet == exact.keySet)
+    est.foreach { case (src, e) =>
+      val x = exact(src).toDouble
+      // k=64 → rse ≈ 1/√62 ≈ 12.7%; 40% is a ≳3σ band
+      assert(math.abs(e - x) / x < 0.40, s"$src: est $e vs exact $x")
     }
   }
 
@@ -104,7 +102,7 @@ class SketchSpec extends SparkSpec {
     val rows = (0 until 30).flatMap(i => Seq(("a", s"v$i"), ("b", s"v$i"))) ++
       (0 until 20).map(i => ("c", s"w$i"))
     val out = graft.operators.Sketches.kmvPairOverlap(
-        rows.toDF("g", "v"), "v", "g", k = 64, useMd5 = true)
+        rows.toDF("g", "v"), "v", "g", k = 64)
       .collect().map(r => (r.getString(0), r.getString(1)) ->
         ((r.getLong(2), r.getLong(3), r.getLong(4)))).toMap
     assert(out(("a", "b")) == ((30L, 30L, 30L)),
@@ -120,7 +118,7 @@ class SketchSpec extends SparkSpec {
     val rows = (0 until 1000).map(i => ("x", s"s$i")) ++
       (500 until 1500).map(i => ("y", s"s$i"))
     val out = graft.operators.Sketches.kmvPairOverlap(
-        rows.toDF("g", "v"), "v", "g", k = 64, useMd5 = true)
+        rows.toDF("g", "v"), "v", "g", k = 64)
       .collect().map(r => (r.getLong(2), r.getLong(4))).head
     assert(math.abs(out._1 - 1500.0) / 1500.0 < 0.40,
       s"union est must track 1500: $out")

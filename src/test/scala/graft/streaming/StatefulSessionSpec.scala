@@ -182,7 +182,7 @@ class StatefulSessionSpec extends SparkSpec {
       .writeStream.format("memory").queryName("t_kmv").outputMode("update").start()
     def batchEst(rows: Seq[KeyedValue]) =
       graft.operators.Sketches.kmvDistinct(
-        rows.toDF("key", "value"), "value", "key", k = 8, useMd5 = true)
+        rows.toDF("key", "value"), "value", "key", k = 8)
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     try {
       in.addData(b1: _*); q.processAllAvailable()
