@@ -1642,7 +1642,6 @@ private[graft] object QueriesA extends QueryShared {
 
     // ---- §3.3 SQL entry point: statements over registered views ----
     "q_sql_filter" -> ((s, d) => {
-      graft.sql.SqlSurface.registerUdfs(s)
       graft.sql.SqlSurface.registerTables(s, d)
       s.sql("""SELECT c_custkey, c_name, c_mktsegment FROM customer
               |WHERE standardize(c_mktsegment) = 'building'
@@ -1650,7 +1649,6 @@ private[graft] object QueriesA extends QueryShared {
     }),
 
     "q_sql_casewhen" -> ((s, d) => {
-      graft.sql.SqlSurface.registerUdfs(s)
       graft.sql.SqlSurface.registerTables(s, d)
       s.sql("""SELECT event_id,
               |  CAST(CASE WHEN CAST(get_sql_field(props, 'k') AS INT) > 50

@@ -72,9 +72,22 @@ object SessionTuning {
       .config("spark.sql.shuffle.partitions", partitions.toLong))
 
   /** The settings every graft session shares (`nanosAsLong`: see
-    * `Tables.load`). */
+    * `Tables.load`), and [[GraftExtensions]]: graft's SQL functions and
+    * its planner rule for Spark's double `round`.
+    *
+    * Why the extension is installed here: this is the one builder every
+    * graft session passes through, and a session gets its functions and
+    * optimizer rules only when it is built. Streaming queries and
+    * `cloneSession` children inherit them from the session they clone,
+    * and a rule in the optimizer covers the Column API, SQL text and every
+    * micro-batch alike, so no query site chooses a kernel or registers a
+    * function by hand. `withExtensions` rather than the static
+    * `spark.sql.extensions` conf: the conf is read from the SparkContext,
+    * which a builder does not configure when a context is already running;
+    * the builder's own extensions reach every session it creates. */
   def apply(b: SparkSession.Builder): SparkSession.Builder =
-    b.config("spark.sql.session.timeZone", "UTC")
+    b.withExtensions(new GraftExtensions)
+      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
       .config(CheckpointFileManagerKey, checkpointFileManagerClass)

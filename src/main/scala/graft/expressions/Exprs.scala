@@ -14,11 +14,6 @@ object Exprs {
   def dot(a: Column, b: Column): Column =
     ColumnBridge.column(Dot(ColumnBridge.expression(a), ColumnBridge.expression(b)))
 
-  /** Spark's HALF_UP `round(x, scale)` on a double, bit for bit, without
-    * the per-row BigDecimal (see [[RoundKernel.halfUp]]). */
-  def fastRound(x: Column, scale: Int): Column =
-    ColumnBridge.column(FastRound(ColumnBridge.expression(x), scale))
-
   def wordShingles(text: Column, n: Int): Column =
     ColumnBridge.column(WordShingles(ColumnBridge.expression(text), n))
 

@@ -1,15 +1,18 @@
 package graft.expressions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, Round, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types._
 
 /** `round(x, scale)` HALF_UP on doubles, bit-identical to Spark's `Round`
   * but without its per-row `BigDecimal.valueOf(x)` (a `Double.toString`)
   * whenever the answer can be decided in primitive arithmetic; see
   * [[RoundKernel.halfUp]]. Doubles only: the type check rejects decimals
-  * (and floats), which stay on Spark's `round`. */
+  * (and floats), which stay on Spark's `round`. Code never builds it by
+  * hand; [[FastDoubleRound]] plans it in place of Spark's double `round`. */
 case class FastRound(child: Expression, scale: Int) extends UnaryExpression {
 
   override def checkInputDataTypes(): TypeCheckResult =
@@ -18,6 +21,10 @@ case class FastRound(child: Expression, scale: Int) extends UnaryExpression {
       s"fast_round expects double, got ${child.dataType}; use round for other types")
 
   override def dataType: DataType = DoubleType
+
+  /** As Spark's `RoundBase`, so the rewrite changes no attribute's
+    * nullability (and no streaming state schema). */
+  override def nullable: Boolean = true
 
   override def nullSafeEval(input: Any): Any =
     RoundKernel.halfUp(input.asInstanceOf[Double], scale)
@@ -29,6 +36,19 @@ case class FastRound(child: Expression, scale: Int) extends UnaryExpression {
     copy(child = newChild)
 
   override def prettyName: String = "fast_round"
+}
+
+/** Optimizer rule: Spark's `round(x, s)` on a double with a literal scale
+  * runs as [[FastRound]]. Decimal, float and integral rounds keep Spark's
+  * `Round`. It runs after analysis, so the cache manager, which matches
+  * analyzed plans, sees `Round` on both sides of every lookup. Installed by
+  * `graft.GraftExtensions`; excluded by name through
+  * `spark.sql.optimizer.excludedRules`. */
+object FastDoubleRound extends Rule[LogicalPlan] {
+  override def apply(plan: LogicalPlan): LogicalPlan = plan.transformAllExpressions {
+    case Round(child, Literal(s: Int, IntegerType), _) if child.dataType == DoubleType =>
+      FastRound(child, s)
+  }
 }
 
 object RoundKernel {

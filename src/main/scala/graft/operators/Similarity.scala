@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.expressions.Exprs.{cosineSim, fastRound}
+import graft.expressions.Exprs.cosineSim
 import graft.functions.VectorFunctions._
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
@@ -26,10 +26,10 @@ object Similarity {
     * +0.0 in another (summation order flips the sign of the residual);
     * the values compare equal but hash/print differently, so every
     * rounded-float OUTPUT column goes through this, with the oracle twins
-    * applying the same `+ 0.0` on the SQL side. The round is
-    * [[fastRound]], Spark's double `round` bit for bit without its per-row
-    * BigDecimal, so r4 takes doubles only. */
-  private def r4(c: Column): Column = fastRound(c, 4) + lit(0.0)
+    * applying the same `+ 0.0` on the SQL side. On a double, the session's
+    * planner rule (`graft.expressions.FastDoubleRound`) runs it as `FastRound`,
+    * Spark's `round` bit for bit without its per-row BigDecimal. */
+  private def r4(c: Column): Column = round(c, 4) + lit(0.0)
 
   /** Exact top-k most-cosine-similar rows to the vector with id `queryId`.
     * The probe vector travels as a broadcast scalar subquery (one row), so
@@ -468,7 +468,7 @@ object Similarity {
                      extraCols: Seq[String] = Nil): DataFrame =
     cb.join(broadcast(qsubs), "sub")
       .select(extraCols.map(col) :+ col("sub") :+ col("code") :+
-        fastRound((dot(col("c_sub"), col("c_sub"))
+        round((dot(col("c_sub"), col("c_sub"))
           - lit(2.0) * dot(col("c_sub"), col("q_sub"))
           + dot(col("q_sub"), col("q_sub"))) * 10000, 0).cast("long")
           .as("d2_q4"): _*)
@@ -750,7 +750,7 @@ object Similarity {
     val lut = spark.read.parquet(indexDir + ".codebook")
       .join(broadcast(qres), "sub")
       .select(col("centroid_id"), col("sub"), col("code"),
-        fastRound((dot(col("c_sub"), col("c_sub"))
+        round((dot(col("c_sub"), col("c_sub"))
           - lit(2.0) * dot(col("c_sub"), col("q_sub"))
           + dot(col("q_sub"), col("q_sub"))) * 10000, 0).cast("long")
           .as("d2_q4"))
@@ -1730,7 +1730,7 @@ object Similarity {
           .as("n_zero"),
         min("__d").as("dim_min"), max("__d").as("dim_max"),
         sum(when(!col("__bad"),
-          fastRound(sqrt(col("__sq")) * 1e6, 0).cast("long")).otherwise(0L))
+          round(sqrt(col("__sq")) * 1e6, 0).cast("long")).otherwise(0L))
           .as("norm_micro_sum"))
   }
 
@@ -1794,22 +1794,6 @@ object Similarity {
       .select(col("rank"), col("probe_id"), col("pred_label"), col("margin"))
   }
 
-  /** End-to-end IVF ANN: build (or rebuild) the stored index, then probe
-    * it. The build is the one-time cost IVF amortizes over many probes —
-    * callers with a probe workload build once via `buildIvfIndex` and then
-    * call `ivfProbe` per query. With the default `indexDir`, each call
-    * writes a FRESH uniquely-named index directory (a full partitioned
-    * copy of the corpus) that the caller owns and must clean up — pass an
-    * explicit stable `indexDir` for anything beyond a one-shot query. */
-  def ivfTopK(emb: DataFrame, vecCol: String, idCol: String, queryId: Long,
-              k: Int, kCentroids: Int, nprobe: Int,
-              indexDir: String = null): DataFrame = {
-    val dir = if (indexDir != null) indexDir
-      else s"target/graft-ivf/idx-k$kCentroids-${java.util.UUID.randomUUID().toString.take(8)}"
-    buildIvfIndex(emb, vecCol, idCol, kCentroids, dir)
-    ivfProbeById(emb.sparkSession, dir, vecCol, idCol, queryId, k, nprobe)
-  }
-
   /** Per-dimension int8 scalar quantization — the vector-compression pass
     * a 100 TB embedding store runs before anything else (4 bytes/dim → 1:
     * a 100 TB float corpus becomes 25 TB of codes + a d-row codebook).
@@ -1846,7 +1830,7 @@ object Similarity {
     ex.join(broadcast(stats), "pos")
       .select(col(idCol), col("pos"),
         when(col("hi") === col("lo"), lit(0L))
-          .otherwise(fastRound((col("x") - col("lo")) / (col("hi") - col("lo")) * 254.0, 0)
+          .otherwise(round((col("x") - col("lo")) / (col("hi") - col("lo")) * 254.0, 0)
             .cast("long"))
           .as("code"))
   }
@@ -1974,9 +1958,9 @@ object Similarity {
     val a = lit(1.0) - col("own_cs")
     val b = lit(1.0) - col("other_cs")
     val sil = when(greatest(a, b) === 0.0, lit(0.0))
-      .otherwise(fastRound((b - a) / greatest(a, b), 4))
+      .otherwise(round((b - a) / greatest(a, b), 4))
     ab.select(col(labelCol),
-        fastRound(sil * 10000, 0).cast("long").as("__su"))
+        round(sil * 10000, 0).cast("long").as("__su"))
       .groupBy(labelCol)
       .agg(count(lit(1)).as("n_vecs"), sum("__su").as("__s"))
       .select(col(labelCol), col("n_vecs"),
@@ -2001,7 +1985,7 @@ object Similarity {
       .select(col("pos").cast("long").as("pos"), col("x").cast("double").as("x"))
       .filter(!isnan(col("x")) &&
         col("x") > Double.NegativeInfinity && col("x") < Double.PositiveInfinity)
-      .select(col("pos"), fastRound(col("x") * 10000, 0).cast("long").as("q"))
+      .select(col("pos"), round(col("x") * 10000, 0).cast("long").as("q"))
     ex.groupBy("pos")
       .agg(count(lit(1)).as("n"), sum(col("q")).as("s1"),
         sum((col("q") * col("q")).cast("decimal(38,0)")).as("s2"))
@@ -2075,7 +2059,7 @@ object Similarity {
       // silently score them while the oracle's cast does not — drop the
       // pair outright (the semanticDecontaminate/knnGraph convention)
       .filter(!isnan(col("cos_sim")))
-      .withColumn("__cq", fastRound(col("cos_sim") * 10000, 0).cast("long"))
+      .withColumn("__cq", round(col("cos_sim") * 10000, 0).cast("long"))
       // caller-owned cache (returned plan reads it from >1 branch); the
       // session's CacheManager holds it until unpersist/clearCache
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -2086,7 +2070,7 @@ object Similarity {
       .agg(topk(col("cos_sim"), col(otherCol)).as("__hits"))
       .select(col(keyCol),
         aggregate(col("__hits"), lit(0L), (acc, h) =>
-          acc + fastRound(h.getField("score") * 10000, 0).cast("long"))
+          acc + round(h.getField("score") * 10000, 0).cast("long"))
           .as(s"__s_$keyCol"),
         size(col("__hits")).cast("long").as(s"__c_$keyCol"))
     val m = pairs
@@ -2141,7 +2125,7 @@ object Similarity {
       .select(col(idCol) +: (0 until dim).map { d =>
         // double BEFORE the scale — float32×int arithmetic rounds
         // differently across engines (the dimStats convention)
-        fastRound(element_at(col(vecCol), d + 1).cast("double") * 10000, 0)
+        round(element_at(col(vecCol), d + 1).cast("double") * 10000, 0)
           .cast("long").as(s"__q$d")
       }: _*)
     val outs = (0 until outDims).map { k =>
@@ -2168,7 +2152,7 @@ object Similarity {
       .filter(!exists(col(vecCol), x =>
         isnan(x) || x <= Double.NegativeInfinity || x >= Double.PositiveInfinity))
       .select(col(idCol) +: (0 until dim).map { d =>
-        fastRound(element_at(col(vecCol), d + 1).cast("double") * 10000, 0)
+        round(element_at(col(vecCol), d + 1).cast("double") * 10000, 0)
           .cast("long").as(s"__q$d")
       }: _*)
     def arm(k: Int, out: String) = (0 until dim).map { d =>
@@ -2369,7 +2353,7 @@ object Similarity {
     // null vectors drop (run embeddingHealthCard first — this kernel
     // expects a health-checked input; a NaN component would poison its
     // whole row/column block)
-    def u(c: Column): Column = fastRound(c.cast("double") * 1e6, 0).cast("long")
+    def u(c: Column): Column = round(c.cast("double") * 1e6, 0).cast("long")
     // quantization stays IN CATALYST (same round/cast expression tree the
     // explode form applied per cell) so the aggregate only ever sees the
     // exact longs the oracle lane defines
@@ -2415,7 +2399,7 @@ object Similarity {
     covRows.foreach { case ((i, j), c) => a(i)(j) = c; a(j)(i) = c }
     // means from one tiny agg (1e6-unit exact sums, same lane)
     val mrow = emb.select(posexplode(col(vecCol)))
-      .select(col("pos"), fastRound(col("col").cast("double") * 1e6, 0).cast("long").as("xu"))
+      .select(col("pos"), round(col("col").cast("double") * 1e6, 0).cast("long").as("xu"))
       .groupBy("pos").agg(sum("xu").as("s"), count(lit(1)).as("n"))
       .collect().map(r => r.getInt(0) -> r.getLong(1).toDouble / r.getLong(2) / 1e6)
       .toMap
@@ -2496,7 +2480,7 @@ object Similarity {
     require(lambdaNum >= 0 && lambdaNum <= 10, "lambdaNum is tenths in [0,10]")
     val spark = emb.sparkSession
     import spark.implicits._
-    def units(c: Column): Column = fastRound(c * 10000, 0).cast("long")
+    def units(c: Column): Column = round(c * 10000, 0).cast("long")
     val cand = bruteForceTopK(emb, vecCol, idCol, queryId, kCandidates)
       .select(col(idCol), units(col("cos_sim")).as("rel_u"))
     val cvec = cand.join(emb.select(col(idCol), col(vecCol).as("__v")), idCol)

@@ -1,7 +1,7 @@
 package graft.sql
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.DataStreamWriter
 
 /** Entry point C (SURVEY.md §3.3): the SQL surface. The reference runs
@@ -10,79 +10,18 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   * over temp views — batch or streaming — and the INSERT INTO sink maps to
   * the caller's writer (writeStream for topics, write for tables).
   *
-  * The reference's SQL UDFs (SURVEY.md §2.3 P6-P7) register on the session:
-  *  - `standardize(s)` — canonicalize a string for comparison
-  *    (samza-sql-filter/src/main/sql/samza.sql:7)
-  *  - `get_sql_field(json, path)` — pull a field out of a nested/opaque
-  *    record; opaque payloads here are JSON strings, so this is
-  *    get_json_object with the reference's dotted-path syntax
-  *    (samza-sql-casewhen/src/main/sql/samza.sql:7-8)
-  *
-  * The native graft functions (cosine_sim, word_shingles) come from
-  * `spark.sql.extensions=graft.GraftExtensions` instead — full Catalyst
-  * expressions with codegen, not UDFs.
+  * The reference's SQL UDFs (SURVEY.md §2.3 P6-P7) — `standardize(s)`,
+  * `get_sql_field(json, path)`/`GetSqlField`, `get_page_key`/`GetPageKey`
+  * — and the native graft functions (`cosine_sim`, `word_shingles`, …)
+  * are in every graft session's registry already: `SessionTuning`
+  * installs them through `graft.GraftExtensions`, as Catalyst expressions
+  * with codegen rather than UDFs. Nothing here registers functions.
   */
 object SqlSurface {
-
-  /** All functions register as NATIVE expression builders, not UDFs:
-    *  - `standardize(s)` compiles to `lower(trim(s))` — whole-stage
-    *    codegen, no boxing, and Catalyst can constant-fold / push it;
-    *  - `get_sql_field(json, 'a.b')` compiles to
-    *    `get_json_object(json, '$.a.b')` — the dotted path concatenates
-    *    onto '$.' at plan time, the optimizer constant-folds it to a
-    *    literal JsonPath, and GetJsonObject's streaming parser (shared,
-    *    path compiled once) replaces the old per-row Jackson tree
-    *    materialization. Same null semantics: null input, null/missing
-    *    path, or malformed JSON all yield null.
-    *  - `get_sql_field(header)` (1-arg) and `get_page_key(header)` both
-    *    compile to `get_json_object(header, '$.pageKey')` — the
-    *    samza-sql-groupby statement's convention, where the doc comment
-    *    reads "Using GetSqlField UDF to extract page key from the
-    *    requestHeader" and the two calls produce the `__key__` and
-    *    `pageKey` columns of the same value
-    *    (samza-sql-groupby/src/main/sql/samza.sql:6-10). Compiling both
-    *    to the IDENTICAL expression is also what lets that statement run
-    *    verbatim: its SELECT names `GetPageKey(pv.requestHeader)` while
-    *    grouping only by `GetSqlField(pv.requestHeader)`, which Catalyst
-    *    accepts because the select expression is semantically equal to
-    *    the grouping expression.
-    *
-    * Each function registers under both its reference spelling (Spark's
-    * registry lowercases lookups, so `GetSqlField` resolves via
-    * "getsqlfield") and the snake_case alias used by the batch queries.
-    */
-  def registerUdfs(spark: SparkSession): Unit = {
-    import org.apache.spark.sql.catalyst.expressions.{Expression, GetJsonObject, Literal, Lower, StringTrim, Concat}
-    import org.apache.spark.sql.graft.ColumnBridge
-    ColumnBridge.registerNativeFunction(spark, "standardize", (args: Seq[Expression]) => {
-      require(args.length == 1, "standardize(str)")
-      Lower(StringTrim(args.head))
-    })
-    val pageKey = (args: Seq[Expression]) => {
-      require(args.length == 1, "get_page_key(header)")
-      GetJsonObject(args.head, Literal("$.pageKey"))
-    }
-    val sqlField = (args: Seq[Expression]) => args match {
-      case Seq(json, path) => GetJsonObject(json, Concat(Seq(Literal("$."), path)))
-      case Seq(_)          => pageKey(args)
-      case _ => throw new IllegalArgumentException(
-        "get_sql_field(json, dotted_path) or get_sql_field(header)")
-    }
-    // Camel-case spellings included: they collapse to the same key when
-    // the registry normalizes (case-insensitive default) and cover the
-    // exact-match path if a session runs case-sensitive.
-    Seq("get_sql_field", "getsqlfield", "GetSqlField").foreach(
-      ColumnBridge.registerNativeFunction(spark, _, sqlField))
-    Seq("get_page_key", "getpagekey", "GetPageKey").foreach(
-      ColumnBridge.registerNativeFunction(spark, _, pageKey))
-  }
 
   /** Register every testdata table as a temp view. */
   def registerTables(spark: SparkSession, dir: String): Unit =
     Tables.all.foreach(n => Tables.load(spark, dir, n).createOrReplaceTempView(n))
-
-  /** Run a SQL statement over the registered views. */
-  def sql(spark: SparkSession, statement: String): DataFrame = spark.sql(statement)
 
   /** A parsed `INSERT INTO <system>.<target> SELECT ...` statement: the
     * sink system (`kafka`, `memory`, `file`/`parquet`), the target within
@@ -152,7 +91,7 @@ object SqlSurface {
     val ins = parseInsert(statement)
     val selected = spark.sql(stripSystemQualifiers(ins.select))
     require(selected.isStreaming,
-      "insertInto wires streaming sinks; for batch views run sql() and write the result")
+      "insertInto wires streaming sinks; for batch views run spark.sql and write the result")
     val checkpoint = options.get("checkpoint")
     // An aggregating SELECT (the samza-sql-groupby statement shape) can't
     // emit in append mode without a watermark; the reference's grouped

@@ -64,17 +64,6 @@ object ColumnBridge {
       flat)
   }
 
-  /** Register a native-expression SQL function on a live session (the
-    * runtime-registration twin of `SparkSessionExtensions.injectFunction`,
-    * which only applies at session build). Used for the reference-parity
-    * SQL functions that compile to built-in Catalyst expressions rather
-    * than row-at-a-time UDFs. */
-  def registerNativeFunction(spark: org.apache.spark.sql.SparkSession, name: String,
-                             builder: Seq[Expression] => Expression): Unit =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-      .createOrReplaceTempFunction(name, builder, "built-in")
-
   /** Delete `dir` recursively when the JVM exits, through Spark's own
     * shutdown-delete hook (it runs after the SparkContext stops, so no
     * task still reads the directory). `ShutdownHookManager` is

@@ -34,8 +34,14 @@ class ContractSpec extends SparkSpec {
     * analysis-only for declarative queries; the iterative/materializing
     * ones execute their driver-side steps at sf0.001, which is what
     * PlanSpec already does. tools/check.py enforces the same contract on
-    * the ORACLE side (DuckDB relation types). */
+    * the ORACLE side (DuckDB relation types).
+    *
+    * The same loop checks each query's optimized plan, subqueries
+    * included: no Spark `round` over a double may be left, since the
+    * session's rule (`graft.expressions.FastDoubleRound`) plans every one
+    * as `fast_round`. */
   test("every query's result schema uses only driver-hashable types") {
+    import org.apache.spark.sql.catalyst.expressions.Round
     import org.apache.spark.sql.types._
     val d = "/root/testdata/sf0.001"
     def blessed(t: DataType): Boolean = t match {
@@ -44,11 +50,16 @@ class ContractSpec extends SparkSpec {
       case _ => false
     }
     val bad = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
-      val sch = fn(spark, d).schema
-      sch.fields.filterNot(f => blessed(f.dataType))
-        .map(f => s"$name.${f.name}: ${f.dataType.simpleString}")
+      val df = fn(spark, d)
+      val doubleRounds = df.queryExecution.optimizedPlan.collectWithSubqueries {
+        case p => p.expressions.flatMap(_.collect {
+          case r: Round if r.child.dataType == DoubleType => r })
+      }.flatten
+      df.schema.fields.filterNot(f => blessed(f.dataType))
+        .map(f => s"$name.${f.name}: ${f.dataType.simpleString}") ++
+        doubleRounds.map(r => s"$name: Spark's round on a double: $r")
     }
-    assert(bad.isEmpty, s"non-blessed result columns:\n  ${bad.mkString("\n  ")}")
+    assert(bad.isEmpty, s"non-blessed result columns or double rounds:\n  ${bad.mkString("\n  ")}")
   }
 
   /** The query's outermost global Sort, walked through order-preserving

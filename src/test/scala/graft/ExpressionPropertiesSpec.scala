@@ -1,6 +1,6 @@
 package graft
 
-import graft.expressions.{Exprs, ShingleKernel}
+import graft.expressions.{Exprs, FastDoubleRound, ShingleKernel}
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.execution.WholeStageCodegenExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -74,6 +74,18 @@ class ExpressionPropertiesSpec extends SparkSpec {
       .find(df.queryExecution.executedPlan)(_.isInstanceOf[WholeStageCodegenExec]).isDefined
     assert(fused == (mode == "CODEGEN_ONLY"), s"$mode plan:\n${df.queryExecution.executedPlan}")
     out
+  }
+
+  private def planOf(df: DataFrame): String = df.queryExecution.optimizedPlan.toString
+
+  /** Spark's `round(`, as a plan prints it; `fast_round(` does not match. */
+  private val SparkRound = "(?<!fast_)round\\(".r
+
+  /** `body` with the fast-round rule excluded through Spark's own
+    * `spark.sql.optimizer.excludedRules`, so its plans run Spark's `Round`. */
+  private def withoutFastRound[T](body: => T): T = {
+    spark.conf.set("spark.sql.optimizer.excludedRules", FastDoubleRound.ruleName)
+    try body finally spark.conf.unset("spark.sql.optimizer.excludedRules")
   }
 
   /** Null-aware bit equality (-0.0 differs from +0.0; NaNs are one). */
@@ -180,22 +192,36 @@ class ExpressionPropertiesSpec extends SparkSpec {
     val xs = (specials ++ ties ++ edges ++ random).flatMap(v => Seq(v, -v))
     val rows = xs.zipWithIndex.map { case (v, i) => Row(i, v) }
     val schema = StructType(Seq(StructField("id", IntegerType), StructField("x", DoubleType)))
+    val rounds = col("id") +: scales.map(s => round(col("x"), s).as(s"r$s"))
     inBothModes { mode =>
-      val got = collectIn(mode, frame(rows, schema).select(col("id") +:
-        scales.flatMap(s => Seq(Exprs.fastRound(col("x"), s), round(col("x"), s))): _*))
-      assert(got.length == xs.length)
-      got.foreach { r =>
+      val fast = frame(rows, schema).select(rounds: _*)
+      val got = collectIn(mode, fast)
+      assert(planOf(fast).contains("fast_round("), planOf(fast))
+      val (want, refPlan) = withoutFastRound {
+        val ref = frame(rows, schema).select(rounds: _*)
+        (collectIn(mode, ref), planOf(ref))
+      }
+      assert(SparkRound.findFirstIn(refPlan).isDefined && !refPlan.contains("fast_round("),
+        s"the reference must run Spark's round:\n$refPlan")
+      assert(got.length == xs.length && want.length == xs.length)
+      got.zip(want).foreach { case (r, w) =>
+        assert(r.getInt(0) == w.getInt(0))
         scales.foreach { s =>
-          val k = 1 + 2 * s
-          assert(bits(r, k) == bits(r, k + 1),
-            s"$mode x=${xs(r.getInt(0))} s=$s: fast ${r.get(k)} vs round ${r.get(k + 1)}")
+          assert(bits(r, 1 + s) == bits(w, 1 + s),
+            s"$mode x=${xs(r.getInt(0))} s=$s: fast ${r.get(1 + s)} vs round ${w.get(1 + s)}")
         }
       }
     }
-    val dec = spark.range(1).select(lit(BigDecimal("1.23456")).as("d"))
-    intercept[org.apache.spark.sql.AnalysisException] {
-      dec.select(Exprs.fastRound(col("d"), 2)).collect()
-    }
+  }
+
+  test("decimal and float rounds keep Spark's round") {
+    val df = frame(Seq(Row(BigDecimal("1.23456").bigDecimal, 1.23456f)), StructType(Seq(
+      StructField("d", DecimalType(10, 5)), StructField("f", FloatType))))
+      .select(round(col("d"), 2).as("rd"), round(col("f"), 2).as("rf"))
+    val plan = planOf(df)
+    assert(SparkRound.findAllIn(plan).length == 2 && !plan.contains("fast_round("), plan)
+    val r = df.collect()(0)
+    assert(r.getDecimal(0) == new java.math.BigDecimal("1.23") && r.getFloat(1) == 1.23f)
   }
 
   test("wikipedia parser round-trips generated well-formed lines") {

@@ -59,7 +59,6 @@ class JaroWinklerSpec extends SparkSpec {
   }
 
   test("Column/codegen lane and SQL registration agree with the kernel; null in, null out") {
-    GraftExtensions.registerAll(spark)
     val df = Seq(("MARTHA", "MARHTA"), ("CRATE", "TRACE"))
       .toDF("a", "b")
       .select(round(Exprs.jaroWinkler(col("a"), col("b")), 10).as("jw"))

@@ -21,6 +21,11 @@ class RetrievalSpec extends SparkSpec {
 
   private def docs = corpus.toDF("doc_id", "text")
 
+  /** A fresh stats path inside a temporary directory, which also holds the
+    * `.stats`/`.terms` files written beside it. */
+  private def statsDir(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(prefix).toString + "/idx"
+
   // shared corpus stats: N = 4 docs, 10 tokens, avgdl = 2.5
   private val avgdl = 2.5
 
@@ -125,7 +130,7 @@ class RetrievalSpec extends SparkSpec {
   }
 
   test("bm25ScoreFrom: stored-stats scores equal the inline kernel's") {
-    val dir = s"target/graft-test-bm25/${java.util.UUID.randomUUID().toString.take(8)}"
+    val dir = statsDir("bm25")
     TextAnalysis.buildBm25Stats(docs, "text", dir)
     val stats = TextAnalysis.loadBm25Stats(spark, dir, Seq("x", "z", "nosuchterm"))
     assert(stats === TextAnalysis.Bm25Stats(4L, 10L, Map("x" -> 3L, "z" -> 1L)))
@@ -142,9 +147,8 @@ class RetrievalSpec extends SparkSpec {
   }
 
   test("appendBm25Stats: additive delta merge equals a full retrain") {
-    val tag = java.util.UUID.randomUUID().toString.take(8)
-    val dirInc = s"target/graft-test-bm25/inc-$tag"
-    val dirFull = s"target/graft-test-bm25/full-$tag"
+    val dirInc = statsDir("bm25-inc")
+    val dirFull = statsDir("bm25-full")
     TextAnalysis.buildBm25Stats(corpus.take(2).toDF("doc_id", "text"), "text", dirInc)
     TextAnalysis.appendBm25Stats(corpus.drop(2).toDF("doc_id", "text"), "text", dirInc)
     TextAnalysis.buildBm25Stats(docs, "text", dirFull)
@@ -164,7 +168,7 @@ class RetrievalSpec extends SparkSpec {
 
   test("bm25ScoreFrom percolates a stream: per-batch output == batch scoring") {
     implicit def sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val dir = s"target/graft-test-bm25/${java.util.UUID.randomUUID().toString.take(8)}"
+    val dir = statsDir("bm25")
     TextAnalysis.buildBm25Stats(docs, "text", dir) // train on the reference corpus
     val stats = TextAnalysis.loadBm25Stats(spark, dir, Seq("x", "z"))
     val panel = Seq(0L -> Seq("x", "z"))
@@ -231,7 +235,7 @@ class RetrievalSpec extends SparkSpec {
       val corpus = (0 until 40).map(i => (i.toLong,
         Seq.fill(1 + rnd.nextInt(30))(vocab(rnd.nextInt(vocab.size))).mkString(" ")))
       val df = corpus.toDF("doc_id", "text")
-      val dir = s"target/graft-test-bm25/prop-$trial-${java.util.UUID.randomUUID().toString.take(8)}"
+      val dir = statsDir(s"bm25-prop-$trial")
       TextAnalysis.buildBm25Stats(df, "text", dir)
       val stats = TextAnalysis.loadBm25Stats(spark, dir, vocab)
       val panel = Seq(0L -> Seq("alpha", "gamma"), 1L -> Seq("eps", "zeta", "eta"))

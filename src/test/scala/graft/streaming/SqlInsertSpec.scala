@@ -64,7 +64,6 @@ class SqlInsertSpec extends SparkSpec {
   }
 
   test("INSERT INTO memory.<name> runs a reference statement end-to-end") {
-    SqlSurface.registerUdfs(spark)
     val in = MemoryStream[SqlProfile]
     in.addData(profiles)
     in.toDS().createOrReplaceTempView("ProfileChanges")
@@ -148,7 +147,6 @@ class SqlInsertSpec extends SparkSpec {
   }
 
   test("all four reference samza.sql files parse, analyze, and wire verbatim") {
-    SqlSurface.registerUdfs(spark)
     registerReferenceViews()
     // Every statement exactly as shipped: UDFs resolve (standardize,
     // GetSqlField 1- and 2-arg, GetPageKey), system qualifiers and the
@@ -170,7 +168,6 @@ class SqlInsertSpec extends SparkSpec {
   }
 
   test("the verbatim samza-sql-groupby statement runs end-to-end") {
-    SqlSurface.registerUdfs(spark)
     registerReferenceViews()
     // Only the sink is redirected (kafka has no broker here); the SELECT —
     // GetSqlField(pv.requestHeader) AS __key__ grouped with
@@ -188,7 +185,6 @@ class SqlInsertSpec extends SparkSpec {
   }
 
   test("the verbatim stream-table-join statement runs end-to-end") {
-    SqlSurface.registerUdfs(spark)
     registerReferenceViews()
     val stmt = referenceSql("samza-sql-stream-table-join")
       .replace("kafka.tracking.EnrichedPageVIewEvent", "memory.enriched_out")
@@ -200,7 +196,6 @@ class SqlInsertSpec extends SparkSpec {
   }
 
   test("get_page_key and 1-arg get_sql_field agree; batch SQL resolves them") {
-    SqlSurface.registerUdfs(spark)
     val out = spark.sql(
       """SELECT GetPageKey(h) AS a, GetSqlField(h) AS b,
         |       get_sql_field(h, 'pageKey') AS c
