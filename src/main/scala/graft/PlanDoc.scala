@@ -137,7 +137,7 @@ object PlanDoc {
     "q_dbscan_clusters" -> "DBSCAN labels: partition-local union-find contraction (mapPartitions, no shuffle) collapses chains into stars before the flat-checkpointed pointer-doubling loop — global rounds scale with cross-partition hops, not component diameter")
 
   def main(args: Array[String]): Unit = {
-    val spark = SessionTuning.local(4).getOrCreate()
+    val spark = SessionTuning.local(SessionTuning.cpus(4)).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val d = "/root/testdata/sf0.001"
     val sb = new StringBuilder

@@ -7,9 +7,10 @@ import org.apache.spark.sql.execution.FormattedMode
 
 /** Dumps `.explain("formatted")` for named queries to
   * `<outDir>/<query>_<suffix>.txt` under the BENCH session configuration
-  * (the same `SessionTuning` session as `Bench`, 32 cores by default), so the
-  * committed plan evidence in `plans/` reflects what the bench actually
-  * runs. Not part of the driver contract.
+  * (the same `SessionTuning` session as `Bench`, 4 cores unless
+  * SPARK_GRAFT_CPUS says otherwise), so the committed plan evidence in
+  * `plans/` reflects what the bench actually runs. Not part of the driver
+  * contract.
   *
   * A [[ContractSorted]] query also gets its pre-barrier body's plan in
   * `<query>_<suffix>_body.txt`.
@@ -20,7 +21,7 @@ object PlanDump {
   def main(args: Array[String]): Unit = {
     require(args.length >= 3, "usage: PlanDump <outDir> <suffix> <query ...>")
     val (outDir, suffix, names) = (args(0), args(1), args.drop(2).toSeq)
-    val spark = SessionTuning.local(SessionTuning.cpus(32)).getOrCreate()
+    val spark = SessionTuning.local(SessionTuning.cpus(4)).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     Files.createDirectories(Paths.get(outDir))

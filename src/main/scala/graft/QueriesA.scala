@@ -851,7 +851,7 @@ private[graft] object QueriesA extends QueryShared {
     // operator; this query proves the COMPOSITION matches too.
     "q_curation" -> ((s, d) => {
       // tw (r14): the md5 shingle/signature kernel serialized on the
-      // single-split scan (OptProbe: 4 single-task 2.9s stages)
+      // single-split scan (stage profile: 4 single-task 2.9s stages)
       val docs = tw(s, d, "documents")
       val keepExact = Dedup.exact(docs, "text", "doc_id")
         .select(col("keep_id").as("doc_id"))

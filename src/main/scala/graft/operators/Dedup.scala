@@ -295,8 +295,8 @@ object Dedup {
     // Band relation persisted like editDistancePairs' (optimization r14):
     // the bucket self-join broadcasts one side, and a broadcast exchange
     // cannot reuse the probe side's plan — without the persist EACH side
-    // re-executes the corpus-grain shingle+signature kernel (OptProbe:
-    // twin md5-heavy stages in every minhash profile). 4 small rows per
+    // re-executes the corpus-grain shingle+signature kernel (stage
+    // profile: twin md5-heavy stages in every minhash query). 4 small rows per
     // doc: cheap to hold, lazy, cached until unpersist/clearCache.
     val bands = bandsFromSignatures(signatures(sh, numHashes),
         numHashes, rowsPerBand)
@@ -711,8 +711,8 @@ object Dedup {
     // Materialize the pairs ONCE before symmetrizing (optimization r14,
     // guide §2.4): the union's two branches are two full plans of the
     // upstream candidate+verify pipeline — the corpus-grain shingle/
-    // signature kernel executed TWICE per clustering call (OptProbe:
-    // twin md5-heavy stage families in every CC query profile). The
+    // signature kernel executed TWICE per clustering call (stage
+    // profile: twin md5-heavy stage families in every CC query). The
     // checkpoint is pairs-bounded (the relation CC loops over), built
     // once per call.
     val pairsOnce = org.apache.spark.sql.graft.ColumnBridge.flatCheckpoint(

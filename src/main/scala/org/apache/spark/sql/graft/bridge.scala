@@ -70,4 +70,10 @@ object ColumnBridge {
     * `private[spark]`, hence the bridge. */
   def deleteOnExit(dir: java.io.File): Unit =
     org.apache.spark.util.ShutdownHookManager.registerShutdownDeleteDir(dir)
+
+  /** Block until every listener event posted so far has been delivered,
+    * so a listener's totals are complete. `SparkContext.listenerBus` is
+    * `private[spark]`, hence the bridge. */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 }

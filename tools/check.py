@@ -2,7 +2,7 @@
 """Local stand-in for the driver's correctness gate: run after
 `sbt "runMain graft.Verify <sfDir> <outDir>"`, compares each dumped
 parquet against the DuckDB oracle SQL on the same testdata tables."""
-import json, sys, glob, os
+import atexit, json, sys, glob, os, shutil, tempfile
 import duckdb
 
 strict_order = "--strict-order" in sys.argv
@@ -10,7 +10,16 @@ argv = [a for a in sys.argv if a != "--strict-order"]
 sf_dir = argv[1] if len(argv) > 1 else "/root/testdata/sf0.01"
 out_dir = argv[2] if len(argv) > 2 else "/tmp/verify_out"
 
-con = duckdb.connect()
+# DuckDB's default memory limit is 80% of RAM, and it fills it: at sf0.01
+# the inlined CTE tree of q_knn_graph_tree_multi held 10.7 GB resident on
+# a 16 GB machine. Cap it at half of physical memory (MemTotal); a quarter
+# is too little for that query, whose operators do not spill. The temp
+# directory lets the operators that can spill do so instead of failing.
+spill_dir = tempfile.mkdtemp(prefix="check-duckdb-", dir="/tmp")
+atexit.register(shutil.rmtree, spill_dir, True)
+mem_mib = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2 // 2**20
+con = duckdb.connect(config={"memory_limit": f"{mem_mib}MiB",
+                             "temp_directory": spill_dir})
 for t in ["region","nation","customer","supplier","part","orders","lineitem",
           "events","documents","embeddings"]:
     # driver-generated SF dirs hold single parquet FILES; ScaleUp output
@@ -28,12 +37,13 @@ oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
 # (r5 q_expectations, r8 q_bootstrap). The duckdb->pandas path LAUNDERS
 # types (HUGEINT/DECIMAL -> float64), which is exactly how those two
 # escaped the old value-compare — so the gate reads the TRUE types:
-# spark via the parquet footer (pyarrow), duck via relation.types.
+# spark via the parquet footer (pyarrow), duck via relation.types (the
+# same relation whose rows are compared, so each oracle SQL binds once).
 BLESSED_ARROW = ("int64", "double", "string", "large_string", "bool",
                  "date32", "timestamp")
 BLESSED_DUCK = {"BIGINT", "DOUBLE", "VARCHAR", "BOOLEAN", "DATE",
                 "TIMESTAMP", "TIMESTAMP_NS"}
-def dtype_violations(name, sql, res_path):
+def dtype_violations(res_path, rel):
     import pyarrow.parquet as pq
     v = []
     files = glob.glob(f"{res_path}/*.parquet")
@@ -41,13 +51,10 @@ def dtype_violations(name, sql, res_path):
         for f in pq.read_schema(files[0]):
             if not str(f.type).startswith(BLESSED_ARROW):
                 v.append(f"spark {f.name}: {f.type}")
-    try:
-        rel = con.sql(sql)
+    if rel is not None:  # SQL errors surface in the value compare below
         for cn, ct in zip(rel.columns, rel.types):
             if str(ct).split("(")[0] not in BLESSED_DUCK:
                 v.append(f"oracle {cn}: {ct}")
-    except Exception:
-        pass  # SQL errors surface in the value compare below
     return v
 
 ok, bad = [], []
@@ -55,12 +62,18 @@ for name, sql in sorted(oracle.items()):
     res_path = f"{out_dir}/{name}"
     if not glob.glob(f"{res_path}/*.parquet"):
         bad.append((name, "NO RESULT DUMPED")); continue
-    dv = dtype_violations(name, sql, res_path)
+    try:
+        rel, sql_error = con.sql(sql), None
+    except Exception as e:
+        rel, sql_error = None, e
+    dv = dtype_violations(res_path, rel)
     if dv:
         bad.append((name, f"DTYPE CONTRACT: {dv}")); continue
     try:
+        if sql_error is not None:
+            raise sql_error
         spark_df = con.sql(f"FROM '{res_path}/*.parquet'").df()
-        duck_df = con.sql(sql).df()
+        duck_df = rel.df()
     except Exception as e:
         bad.append((name, f"SQL ERROR: {e}")); continue
     sc = sorted(spark_df.columns); dc = sorted(duck_df.columns)
