@@ -178,7 +178,7 @@ private[graft] object QueriesA extends QueryShared {
     // ---- K2 materialized upsert table: multi-batch last-write-wins ----
     "q_upsert_table" -> ((s, d) => {
       val ev = t(s, d, "events").select(col("user_id"), col("event_type"), col("event_id"))
-      val dir = java.nio.file.Files.createTempDirectory("graft_upsert").toString + "/tbl"
+      val dir = storeDir("upsert", d, s"-${java.util.UUID.randomUUID}") // fresh per call
       // three deterministic changelog chunks exercise cross-batch merging;
       // the final table must be last-write-wins by event_id regardless of
       // how the changelog was split

@@ -1954,6 +1954,42 @@ private[graft] trait QueryShared {
        |SELECT src, CAST(rnk AS BIGINT) AS rnk, dst, cs + 0.0 AS cos_sim
        |FROM r WHERE rnk <= 3 ORDER BY src, rnk""".stripMargin
 
+  /** The shadow-augmented tree CTE chain (v, a0 … a4 with `sh` flags)
+    * shared by the tree×multi twins — semantics documented at
+    * [[semDedupTreeMultiSql]]. The level CTEs are MATERIALIZED: each
+    * level reads the one below about 8 times, and DuckDB inlining the
+    * 4-level chain took minutes and gigabytes per twin at sf0.01. */
+  private[graft] def treeMultiLevelCtes: String = {
+    val branch = 16; val maxLeaf = 64; val depth = treeDepth
+    def level(i: Int): String =
+      s"""p$i AS MATERIALIZED (SELECT cell FROM a$i WHERE sh = 0
+         |  GROUP BY cell HAVING count(*) > $maxLeaf),
+         |s$i AS MATERIALIZED (SELECT cell, sid, sv FROM (
+         |    SELECT a.cell, a.vec_id AS sid, a.vv AS sv,
+         |      row_number() OVER (PARTITION BY a.cell ORDER BY a.vec_id) AS rn
+         |    FROM a$i a JOIN p$i p ON a.cell = p.cell WHERE a.sh = 0)
+         |  WHERE rn <= $branch),
+         |r$i AS MATERIALIZED (SELECT vec_id, vv, sh, ncell, rn FROM (
+         |    SELECT a.vec_id, a.vv, a.sh,
+         |      a.cell || '-' || CAST(s.sid AS VARCHAR) AS ncell,
+         |      row_number() OVER (PARTITION BY a.vec_id, a.cell ORDER BY
+         |        round(list_dot_product(a.vv, s.sv)
+         |          / (sqrt(list_dot_product(a.vv, a.vv)) * sqrt(list_dot_product(s.sv, s.sv))),4) DESC,
+         |        s.sid) AS rn
+         |    FROM a$i a JOIN s$i s ON a.cell = s.cell) WHERE rn <= 2),
+         |a${i + 1} AS MATERIALIZED (
+         |  SELECT a.vec_id, a.vv, a.cell, a.sh
+         |  FROM a$i a LEFT JOIN p$i p ON a.cell = p.cell WHERE p.cell IS NULL
+         |  UNION ALL
+         |  SELECT vec_id, vv, ncell AS cell, sh FROM r$i WHERE rn = 1
+         |  UNION ALL
+         |  SELECT vec_id, vv, ncell AS cell, 1 AS sh FROM r$i
+         |  WHERE rn = 2 AND sh = 0)""".stripMargin
+    s"""v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vv FROM embeddings),
+       |a0 AS (SELECT vec_id, vv, 'r' AS cell, 0 AS sh FROM v),
+       |${(0 until depth).map(level).mkString(",\n")}""".stripMargin
+  }
+
   /** Shadow-augmented hierarchical SemDeDup oracle — the unrolled twin
     * of `Similarity.semDedupTreeMulti(branch = 16, maxLeaf = 64,
     * maxDepth = 4)`. Each level extends [[semDedupTreeSql]]'s unroll
@@ -1969,40 +2005,6 @@ private[graft] trait QueryShared {
     * collapses pairs co-resident in more than one cell, NaN cosines
     * drop (the engine's pair filter). Exactness preconditions as
     * [[semDedupTreeSql]] (no leaf above maxCell = 8192). */
-  /** The shadow-augmented tree CTE chain (v, a0 … a4 with `sh` flags)
-    * shared by the tree×multi twins — semantics documented at
-    * [[semDedupTreeMultiSql]]. */
-  private[graft] def treeMultiLevelCtes: String = {
-    val branch = 16; val maxLeaf = 64; val depth = treeDepth
-    def level(i: Int): String =
-      s"""p$i AS (SELECT cell FROM a$i WHERE sh = 0
-         |  GROUP BY cell HAVING count(*) > $maxLeaf),
-         |s$i AS (SELECT cell, sid, sv FROM (
-         |    SELECT a.cell, a.vec_id AS sid, a.vv AS sv,
-         |      row_number() OVER (PARTITION BY a.cell ORDER BY a.vec_id) AS rn
-         |    FROM a$i a JOIN p$i p ON a.cell = p.cell WHERE a.sh = 0)
-         |  WHERE rn <= $branch),
-         |r$i AS (SELECT vec_id, vv, sh, ncell, rn FROM (
-         |    SELECT a.vec_id, a.vv, a.sh,
-         |      a.cell || '-' || CAST(s.sid AS VARCHAR) AS ncell,
-         |      row_number() OVER (PARTITION BY a.vec_id, a.cell ORDER BY
-         |        round(list_dot_product(a.vv, s.sv)
-         |          / (sqrt(list_dot_product(a.vv, a.vv)) * sqrt(list_dot_product(s.sv, s.sv))),4) DESC,
-         |        s.sid) AS rn
-         |    FROM a$i a JOIN s$i s ON a.cell = s.cell) WHERE rn <= 2),
-         |a${i + 1} AS (
-         |  SELECT a.vec_id, a.vv, a.cell, a.sh
-         |  FROM a$i a LEFT JOIN p$i p ON a.cell = p.cell WHERE p.cell IS NULL
-         |  UNION ALL
-         |  SELECT vec_id, vv, ncell AS cell, sh FROM r$i WHERE rn = 1
-         |  UNION ALL
-         |  SELECT vec_id, vv, ncell AS cell, 1 AS sh FROM r$i
-         |  WHERE rn = 2 AND sh = 0)""".stripMargin
-    s"""v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS vv FROM embeddings),
-       |a0 AS (SELECT vec_id, vv, 'r' AS cell, 0 AS sh FROM v),
-       |${(0 until depth).map(level).mkString(",\n")}""".stripMargin
-  }
-
   private[graft] def semDedupTreeMultiSql: String =
     s"""WITH $treeMultiLevelCtes,
        |n AS (SELECT vec_id, cell, vv,

@@ -542,7 +542,7 @@ object Similarity {
                      topK: Int): DataFrame = {
     val lut = adcLut(spark.read.parquet(indexDir + ".codebook"),
       subSlices(probe, "q_vec", m, dim))
-    adcCut(spark.read.parquet(indexDir).filter(col(idCol) =!= excludeId),
+    adcCut(readIndex(spark, indexDir).filter(col(idCol) =!= excludeId),
       lut, Seq("sub", "code"), idCol, topK)
   }
 
@@ -599,7 +599,7 @@ object Similarity {
       .collect().map(_.getInt(0))
     val lut = adcLut(spark.read.parquet(indexDir + ".codebook"),
       subSlices(probe, "q_vec", m, dim))
-    adcCut(spark.read.parquet(indexDir)
+    adcCut(readIndex(spark, indexDir)
         .filter(col("centroid_id").isin(cells.map(Integer.valueOf): _*))
         .filter(col(idCol) =!= excludeId),
       lut, Seq("sub", "code"), idCol, topK)
@@ -639,7 +639,7 @@ object Similarity {
     // append while its stale codes remain in the old cell — and adcCut
     // sums d2_q4 per id, so a probe covering both cells would return a
     // silently doubled distance. Id-column-only scan keeps this cheap.
-    val existingIds = spark.read.parquet(indexDir)
+    val existingIds = readIndex(spark, indexDir)
       .select(col(idCol)).distinct()
     rows.join(existingIds, Seq(idCol), "left_anti")
       .write.partitionBy("centroid_id").mode("append").parquet(indexDir)
@@ -708,7 +708,7 @@ object Similarity {
     * STALE-but-present old side tables — probes would score against the
     * wrong codebook and return silently wrong distances. Cleared-first,
     * any mid-rebuild death leaves the side tables absent and every probe
-    * fails loudly. */
+    * fails loudly. So does a crashed forget's tmp (old-index cells). */
   private def clearIndexSideTables(
       spark: org.apache.spark.sql.SparkSession, indexDir: String): Unit = {
     import org.apache.hadoop.fs.Path
@@ -716,6 +716,7 @@ object Similarity {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(new Path(indexDir + ".codebook"), true)
     fs.delete(new Path(indexDir + ".centroids"), true)
+    graft.sources.AtomicSwap.discard(spark, indexDir)
   }
 
   /** Probe the residual index: rank cells, build ONE LUT PER PROBED CELL
@@ -755,7 +756,7 @@ object Similarity {
           + dot(col("q_sub"), col("q_sub"))) * 10000, 0).cast("long")
           .as("d2_q4"))
     val cellIds = ranked.select("centroid_id").collect().map(_.getInt(0))
-    spark.read.parquet(indexDir)
+    readIndex(spark, indexDir)
       .filter(col("centroid_id").isin(cellIds.map(Integer.valueOf): _*))
       .filter(col(idCol) =!= excludeId)
       .join(broadcast(lut), Seq("centroid_id", "sub", "code"))
@@ -771,9 +772,11 @@ object Similarity {
     * `idCol`): rewrite ONLY the cell directories that actually hold the
     * doomed ids — the [[graft.sources.UpsertParquet.forgetKeys]]
     * discipline applied to the cell layout (targeted deletion must not
-    * cost a corpus rewrite, or nobody runs it). Per-cell tmp-write +
-    * directory swap, idempotent (a replayed request finds no matches and
-    * rewrites nothing), and a cell whose every row is forgotten is
+    * cost a corpus rewrite, or nobody runs it). The hit cells are swapped
+    * by [[graft.sources.AtomicSwap.swapPartitions]], so a replay after a
+    * crash lands on the uninterrupted result (`SimilaritySpec`'s
+    * crash-state cases). Idempotent (a replayed request finds no matches
+    * and rewrites nothing), and a cell whose every row is forgotten is
     * deleted outright. Driver-side collects are cell-id lists (bounded).
     * Side tables (centroids, codebook) are untouched — an emptied cell
     * is a valid, merely unreachable, index state. Returns rows
@@ -781,30 +784,13 @@ object Similarity {
   def forgetFromIndex(spark: org.apache.spark.sql.SparkSession,
                       indexDir: String, idCol: String,
                       ids: DataFrame): Long = {
-    import org.apache.hadoop.fs.Path
-    val fs = new Path(indexDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new Path(indexDir))) return 0L
-    // HEAL any prior crash before reading the index: the swap below
-    // renames a live cell ASIDE (never deletes the only copy) before
-    // renaming its replacement in, so a death in the window leaves the
-    // original at `<cell>.old-forget` with the live dir missing —
-    // restored here; a leftover copy NEXT TO a live dir is garbage from
-    // a completed swap and is dropped. Replays are therefore
-    // self-healing instead of silently lossy.
-    val leftovers = fs.globStatus(new Path(indexDir, "centroid_id=*.old-forget"))
-    if (leftovers != null) leftovers.foreach { st =>
-      val old = st.getPath
-      val live = new Path(indexDir, old.getName.stripSuffix(".old-forget"))
-      if (!fs.exists(live)) {
-        if (!fs.rename(old, live))
-          throw new java.io.IOException(s"heal failed: $old -> $live")
-      } else fs.delete(old, true)
-    }
+    val path = new org.apache.hadoop.fs.Path(indexDir)
+    graft.sources.AtomicSwap.recover(spark, indexDir) // may install the dir
+    if (!path.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(path)) return 0L
+    val cur = readIndex(spark, indexDir)
     val doomedIds = ids.select(col(idCol)).distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val cur = spark.read.parquet(indexDir)
       val doomed = cur.join(doomedIds, idCol :: Nil, "left_semi")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
@@ -812,31 +798,21 @@ object Similarity {
         if (removed == 0L) return 0L
         val hit = doomed.select("centroid_id").distinct()
           .collect().map(_.getInt(0)).sorted
-        val kept = cur
-          .filter(col("centroid_id").isin(hit.map(Integer.valueOf): _*))
-          .join(doomedIds, idCol :: Nil, "left_anti")
-        val tmp = new Path(indexDir + ".tmp-forget")
-        fs.delete(tmp, true)
-        kept.repartition(col("centroid_id"))
-          .write.mode("overwrite").partitionBy("centroid_id")
-          .parquet(tmp.toString)
-        hit.foreach { cId =>
-          val src = new Path(tmp, s"centroid_id=$cId")
-          val dst = new Path(indexDir, s"centroid_id=$cId")
-          val old = new Path(indexDir, s"centroid_id=$cId.old-forget")
-          fs.delete(old, true) // stale garbage only — the heal pass ran
-          // move the live dir ASIDE, never delete the only copy: a crash
-          // between these renames leaves `old` intact for the heal pass
-          if (fs.exists(dst) && !fs.rename(dst, old))
-            throw new java.io.IOException(s"cell set-aside failed: $dst -> $old")
-          if (fs.exists(src) && !fs.rename(src, dst))
-            throw new java.io.IOException(s"cell swap failed: $src -> $dst")
-          fs.delete(old, true)
-        }
-        fs.delete(tmp, true)
+        graft.sources.AtomicSwap.swapPartitions(
+          cur.filter(col("centroid_id").isin(hit.map(Integer.valueOf): _*))
+            .join(doomedIds, idCol :: Nil, "left_anti"),
+          indexDir, "centroid_id", hit)
         removed
       } finally doomed.unpersist()
     } finally doomedIds.unpersist()
+  }
+
+  /** The one read path of every index this file stores: recover a cell
+    * swap a crash left half done, then read. */
+  private[graft] def readIndex(spark: org.apache.spark.sql.SparkSession,
+                               indexDir: String): DataFrame = {
+    graft.sources.AtomicSwap.recover(spark, indexDir)
+    spark.read.parquet(indexDir)
   }
 
   /** Two-stage retrieval: a PQ/ADC shortlist re-ranked FULL-PRECISION —
@@ -1434,6 +1410,8 @@ object Similarity {
       col("centroid_id").cast("int").as("centroid_id"), col("c_vec"))
     val assigned = assignToCentroids(emb, vecCol, idCol, cents)
       .select(col(idCol), col("centroid_id").cast("int").as("centroid_id"))
+    // a crashed forget's tmp holds cells of the index being replaced
+    graft.sources.AtomicSwap.discard(emb.sparkSession, indexDir)
     emb.join(assigned, idCol)
       .write.partitionBy("centroid_id").mode("overwrite").parquet(indexDir)
     cents.coalesce(1)
@@ -1488,7 +1466,7 @@ object Similarity {
     // while its old row survives — two rows for one id, silently. The
     // whole-index read stays cheap because only the id column is scanned
     // (column-pruned, dictionary-encoded).
-    val existingIds = spark.read.parquet(indexDir)
+    val existingIds = readIndex(spark, indexDir)
       .select(col(idCol)).distinct()
     rows.join(existingIds, Seq(idCol), "left_anti")
       .write.partitionBy("centroid_id").mode("append").parquet(indexDir)
@@ -1537,7 +1515,7 @@ object Similarity {
       delta.select(col(idCol), col(vecCol)).join(assigned, idCol))
     val cells = deltaCells.select("centroid_id").distinct()
       .collect().map(_.getInt(0))
-    val members = spark.read.parquet(indexDir)
+    val members = readIndex(spark, indexDir)
       .filter(col("centroid_id").isin(cells.map(Integer.valueOf): _*))
       .select(col(idCol), col(vecCol),
         col("centroid_id").cast("int").as("centroid_id"))
@@ -1604,7 +1582,7 @@ object Similarity {
       .limit(nprobe)
       .select("centroid_id")
       .collect().map(_.getInt(0))
-    spark.read.parquet(indexDir)
+    readIndex(spark, indexDir)
       .filter(col("centroid_id").isin(cells.map(Integer.valueOf): _*))
       .filter(col(idCol) =!= excludeId)
       .crossJoin(broadcast(probe))
@@ -1622,7 +1600,7 @@ object Similarity {
   def ivfProbeById(spark: org.apache.spark.sql.SparkSession, indexDir: String,
                    vecCol: String, idCol: String, queryId: Long,
                    k: Int, nprobe: Int): DataFrame = {
-    val probe = spark.read.parquet(indexDir)
+    val probe = readIndex(spark, indexDir)
       .filter(col(idCol) === queryId).select(col(vecCol).as("q_vec"))
     ivfProbe(spark, indexDir, vecCol, idCol, probe, queryId, k, nprobe)
   }
@@ -1664,7 +1642,7 @@ object Similarity {
       .collect().map(_.getInt(0))
     val topk = udaf(new graft.functions.TopKHits(k),
       graft.functions.TopKHits.hitEncoder)
-    spark.read.parquet(indexDir)
+    readIndex(spark, indexDir)
       .filter(col("centroid_id").isin(cellList.map(Integer.valueOf): _*))
       .join(broadcast(probeCells), Seq("centroid_id"))
       .filter(col(idCol) =!= col("probe_id"))
@@ -1689,7 +1667,7 @@ object Similarity {
                          indexDir: String, vecCol: String, idCol: String,
                          labelCol: String, probes: DataFrame,
                          k: Int, nprobe: Int): DataFrame = {
-    val stored = spark.read.parquet(indexDir)
+    val stored = readIndex(spark, indexDir)
     voteOnHits(ivfProbeBatch(spark, indexDir, vecCol, idCol, probes, k, nprobe),
       stored, idCol, labelCol)
   }

@@ -1186,7 +1186,7 @@ object TextAnalysis {
     * of [[bm25StatRelation]]. Collision-proof BY CONSTRUCTION, not by
     * improbability: [[tokens]] splits on spaces, so no real token can
     * ever contain one. */
-  private val LenSentinel = "  len"
+  private val LenSentinel = "\u0000 len"
 
   /** The one-pass (term, df, tot) relation both stats artifacts project
     * from: every document emits its source-deduped terms plus ONE

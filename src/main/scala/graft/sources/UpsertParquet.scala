@@ -19,13 +19,14 @@ import org.apache.spark.sql.streaming.DataStreamWriter
   * 100 buckets' worth of data, not the table. The bucket list that reaches
   * the driver is bounded by nBuckets — ids only, never rows.
   *
-  * Durability model: per-bucket directory swap (write `.tmp`, delete old,
-  * rename in). A crash mid-swap can leave A bucket stale or missing until
-  * the batch replays — the checkpoint makes the batch replay and the
-  * rewrite is idempotent (latest-wins is deterministic). A transactional
-  * table format (Delta/Iceberg) would make the swap atomic; neither is on
-  * this classpath, and the plan shape — prune, merge, rewrite-touched —
-  * is identical there. */
+  * Durability model: the touched buckets are swapped in by
+  * [[AtomicSwap.swapPartitions]], and every entry point below first runs
+  * [[AtomicSwap.recover]], which installs a bucket a crash left missing.
+  * The replayed batch rewrites the rest; latest-wins is deterministic,
+  * so the replay lands on the uninterrupted result (`UpsertParquetSpec`'s
+  * crash-state cases). A transactional table format (Delta/Iceberg)
+  * would make the swap atomic; neither is on this classpath, and the plan
+  * shape — prune, merge, rewrite-touched — is identical there. */
 object UpsertParquet {
 
   private def bucketCol(keyCols: Seq[String], nBuckets: Int) =
@@ -36,6 +37,7 @@ object UpsertParquet {
   def upsertBatch(changes: DataFrame, dir: String, keyCols: Seq[String],
                   seqCol: String, nBuckets: Int): Unit = {
     val spark = changes.sparkSession
+    AtomicSwap.recover(spark, dir)
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     // "Table exists" must mean it HAS bucket data, not that the directory
     // is present: a pre-created empty dir (or a crash between mkdirs and
@@ -66,27 +68,9 @@ object UpsertParquet {
         all.withColumn("__rn", row_number().over(w))
           .filter(col("__rn") === 1).drop("__rn", "__src")
       }
-      val tmp = new Path(dir + ".tmp-swap")
-      fs.delete(tmp, true)
-      // cluster by bucket before the partitioned write: without it every
-      // shuffle partition spills a sliver into every bucket directory —
-      // touched-buckets × shuffle-width tiny files per batch
-      merged.repartition(col("__bucket"))
-        .write.mode("overwrite").partitionBy("__bucket").parquet(tmp.toString)
-      fs.mkdirs(new Path(dir))
-      touched.foreach { bId =>
-        val src = new Path(tmp, s"__bucket=$bId")
-        val dst = new Path(dir, s"__bucket=$bId")
-        // check the replacement BEFORE destroying the live bucket — the
-        // reverse order would wipe a bucket's history if the replacement
-        // is unexpectedly absent
-        if (fs.exists(src)) {
-          fs.delete(dst, true)
-          if (!fs.rename(src, dst))
-            throw new java.io.IOException(s"bucket swap failed: $src -> $dst")
-        }
-      }
-      fs.delete(tmp, true)
+      // every touched bucket holds at least its batch rows, so each one
+      // has a replacement: the swap never leaves a touched bucket empty
+      AtomicSwap.swapPartitions(merged, dir, "__bucket", touched)
     } finally batch.unpersist()
   }
 
@@ -97,16 +81,15 @@ object UpsertParquet {
     * pruning contract as [[upsertBatch]], applied to deletion). Returns
     * the number of rows removed.
     *
-    * A bucket whose EVERY row is forgotten produces no replacement
-    * directory — the live bucket is deleted outright (the opposite of
-    * upsert's keep-on-missing rule, which is why the two swap loops
-    * differ: here an absent replacement IS the correct final state).
-    * Idempotent: re-running the same request removes 0 rows and rewrites
-    * nothing (no touched buckets have matches). Crash model identical to
-    * upsertBatch: per-bucket swap, replay-safe. */
+    * A bucket whose EVERY row is forgotten has no replacement, so
+    * [[AtomicSwap.swapPartitions]] leaves it absent. Idempotent:
+    * re-running the same request removes 0 rows and rewrites nothing (no
+    * touched buckets have matches). Crash model identical to upsertBatch:
+    * recover first, per-bucket swap, replay-safe. */
   def forgetKeys(keys: DataFrame, dir: String, keyCols: Seq[String],
                  nBuckets: Int): Long = {
     val spark = keys.sparkSession
+    AtomicSwap.recover(spark, dir)
     val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(new Path(dir))) return 0L
     val k = keys.select(keyCols.map(col): _*).distinct()
@@ -134,18 +117,7 @@ object UpsertParquet {
           val kept = cur
             .filter(col("__bucket").isin(hit.map(Integer.valueOf): _*))
             .join(k.drop("__bucket"), keyCols, "left_anti")
-          val tmp = new Path(dir + ".tmp-forget")
-          fs.delete(tmp, true)
-          kept.repartition(col("__bucket"))
-            .write.mode("overwrite").partitionBy("__bucket").parquet(tmp.toString)
-          hit.foreach { bId =>
-            val src = new Path(tmp, s"__bucket=$bId")
-            val dst = new Path(dir, s"__bucket=$bId")
-            fs.delete(dst, true)
-            if (fs.exists(src) && !fs.rename(src, dst))
-              throw new java.io.IOException(s"bucket swap failed: $src -> $dst")
-          }
-          fs.delete(tmp, true)
+          AtomicSwap.swapPartitions(kept, dir, "__bucket", hit)
           removed
         } finally doomed.unpersist()
       } finally cur.unpersist()
@@ -163,6 +135,8 @@ object UpsertParquet {
       }
 
   /** Read the materialized table without the internal bucket column. */
-  def read(spark: SparkSession, dir: String): DataFrame =
+  def read(spark: SparkSession, dir: String): DataFrame = {
+    AtomicSwap.recover(spark, dir)
     spark.read.parquet(dir).drop("__bucket")
+  }
 }

@@ -653,6 +653,37 @@ class SimilaritySpec extends SparkSpec {
       Seq(victim).toDF("id")) == 0L)
   }
 
+  test("forgetFromIndex: a crash at any point of the cell swap, replayed, equals the uninterrupted run") {
+    val scratch = java.nio.file.Files.createTempDirectory("forgetidx_crash").toFile
+    val base = new java.io.File(scratch, "base/tbl")
+    Similarity.buildIvfIndex(vecs(40), "v", "id", kCentroids = 4, indexDir = base.getPath)
+    // every id of id 5's cell plus two more, so one swapped cell ends up absent
+    val cells = spark.read.parquet(base.getPath)
+      .collect().map(r => r.getAs[Long]("id") -> r.getAs[Int]("centroid_id")).toMap
+    val doomed = cells.keys.filter(cells(_) == cells(5L)).toSeq ++ Seq(17L, 33L)
+    val (expect, replayed) = graft.SwapCrashStates.replays(base,
+      f => Similarity.forgetFromIndex(spark, f.getPath, "id", doomed.toDF("id")),
+      f => Similarity.readIndex(spark, f.getPath)
+        .select(col("id"), col("centroid_id"), col("v").cast("string"))
+        .orderBy("id").collect().map(_.mkString("|")).toSeq, scratch)
+    assert(expect.size == 40 - doomed.distinct.size)
+    replayed.foreach { case (state, rows) => assert(rows == expect, state) }
+  }
+
+  test("an index rebuild drops a crashed forget's tmp, so its old cells never reappear") {
+    val dir = java.nio.file.Files.createTempDirectory("forgetidx_rebuild").toFile
+      .getAbsolutePath + "/idx"
+    Similarity.buildIvfIndex(vecs(40), "v", "id", kCentroids = 4, indexDir = dir)
+    // a forget that crashed with its tmp complete, holding old cell 3
+    org.apache.commons.io.FileUtils.copyDirectory(new java.io.File(s"$dir/centroid_id=3"),
+      new java.io.File(s"$dir.tmp-append/centroid_id=3"))
+    new java.io.File(s"$dir.tmp-append/_SUCCESS").createNewFile()
+    Similarity.buildIvfIndex(vecs(40), "v", "id", kCentroids = 2, indexDir = dir)
+    val cells = Similarity.readIndex(spark, dir).select("centroid_id").distinct()
+      .collect().map(_.getInt(0)).sorted.toSeq
+    assert(cells == Seq(0, 1) && Similarity.readIndex(spark, dir).count() == 40)
+  }
+
   test("residual IVF-PQ: the exact dup of a seed encodes to residual distance 0") {
     val base = (0 until 30).map { i =>
       (i.toLong, Array.tabulate(8)(j => (((i * 31 + j * 17) % 100) + 1) / 100.0f))

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.SparkSpec
+import graft.{SparkSpec, SwapCrashStates}
 import graft.sources.UpsertParquet
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -126,5 +126,43 @@ class UpsertParquetSpec extends SparkSpec {
     assert(removed == 40L)
     assert(!dir.listFiles().exists(_.getName.startsWith("__bucket=")),
       "all buckets emptied -> all bucket dirs gone")
+  }
+
+  // Crash inside the bucket swap, then replay (a restart from the
+  // checkpoint re-runs the batch): every state SwapCrashStates builds
+  // must end on the uninterrupted table, row for row.
+  private def crashReplays(op: String => Unit) = {
+    val scratch = java.nio.file.Files.createTempDirectory("upsert_crash").toFile
+    val base = new java.io.File(scratch, "base/tbl")
+    UpsertParquet.upsertBatch(
+      (1 to 40).map(i => (s"u$i", s"c${i % 7}", i.toLong)).toDF("userId", "company", "version"),
+      base.getPath, Seq("userId"), "version", nBuckets = 8)
+    val (expect, replayed) = SwapCrashStates.replays(base, f => op(f.getPath),
+      f => UpsertParquet.read(spark, f.getPath).orderBy("userId")
+        .collect().map(_.mkString("|")).toSeq, scratch)
+    replayed.foreach { case (state, rows) => assert(rows == expect, state) }
+    expect
+  }
+
+  test("upsertBatch: a crash at any point of the bucket swap, replayed, equals the uninterrupted run") {
+    val rows = crashReplays(dir => UpsertParquet.upsertBatch(
+      Seq(("u4", "new", 100L), ("u22", "new", 101L), ("u30", "new", 102L),
+        ("u41", "new", 103L)).toDF("userId", "company", "version"),
+      dir, Seq("userId"), "version", nBuckets = 8))
+    assert(rows.size == 41 && rows.contains("u22|new|101"))
+  }
+
+  test("forgetKeys: a crash at any point of the bucket swap, replayed, equals the uninterrupted run") {
+    // every key of u4's bucket, so one swapped bucket ends up absent, and
+    // one key of each of two other buckets
+    val bucketOf = (1 to 40).map(i => s"u$i").toDF("userId")
+      .select(col("userId"), pmod(hash(col("userId")), lit(8)))
+      .as[(String, Int)].collect().toSeq
+    val (emptied, rest) = bucketOf.partition(_._2 == bucketOf.toMap.apply("u4"))
+    val doomed = emptied.map(_._1) ++
+      rest.groupBy(_._2).values.map(_.head._1).toSeq.sorted.take(2)
+    val rows = crashReplays(dir => UpsertParquet.forgetKeys(
+      doomed.toDF("userId"), dir, Seq("userId"), nBuckets = 8))
+    assert(rows.size == 40 - doomed.size)
   }
 }

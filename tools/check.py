@@ -10,11 +10,12 @@ argv = [a for a in sys.argv if a != "--strict-order"]
 sf_dir = argv[1] if len(argv) > 1 else "/root/testdata/sf0.01"
 out_dir = argv[2] if len(argv) > 2 else "/tmp/verify_out"
 
-# DuckDB's default memory limit is 80% of RAM, and it fills it: at sf0.01
-# the inlined CTE tree of q_knn_graph_tree_multi held 10.7 GB resident on
-# a 16 GB machine. Cap it at half of physical memory (MemTotal); a quarter
-# is too little for that query, whose operators do not spill. The temp
-# directory lets the operators that can spill do so instead of failing.
+# DuckDB's default memory limit is 80% of RAM, and it fills it. Cap it at
+# half of physical memory (MemTotal): a whole sf0.01 compare peaks at about
+# 2.2 GB on a 4-vCPU, 16 GB VM. The tree×multi twins stay that small only
+# while their level CTEs are MATERIALIZED; inlined, one of them alone held
+# 10.7 GB. The temp directory lets the operators that can spill do so
+# instead of failing.
 spill_dir = tempfile.mkdtemp(prefix="check-duckdb-", dir="/tmp")
 atexit.register(shutil.rmtree, spill_dir, True)
 mem_mib = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2 // 2**20
